@@ -2547,10 +2547,11 @@ def tool_bloom(argv: list[str]) -> int:
     p.add_argument("--output-parquet", help="gate: flagged table path")
     args = p.parse_args(argv)
 
-    import json as _json
-
+    from . import store
     from .operators.bloom import bloom_build, bloom_gate, bloom_params
 
+    store.require_local(args.filter)
+    meta_path = os.path.join(args.filter, "_bloom_meta.json")
     spark = _spark()
     df = spark.read.parquet(args.input)
     if args.action == "build":
@@ -2568,14 +2569,12 @@ def tool_bloom(argv: list[str]) -> int:
         # sizing sidecar so `gate` replays the same hash family
         meta = {"n_bits": n_bits, "n_hashes": n_hashes,
                 "key_column": args.key_column}
-        with open(os.path.join(args.filter, "_bloom_meta.json"), "w") as fh:
-            _json.dump(meta, fh)
+        store.commit_json(meta_path, meta)
         print(f"bloom filter written to {args.filter}: "
               f"{n_bits} bits, {n_hashes} hashes")
         return 0
     if args.mode == "shuffle" and not args.id_column:
         p.error("gate --mode shuffle requires --id-column (a unique key)")
-    meta_path = os.path.join(args.filter, "_bloom_meta.json")
     if not os.path.exists(meta_path):
         print(
             f"bloom gate: no _bloom_meta.json in {args.filter} — build "
@@ -2583,8 +2582,7 @@ def tool_bloom(argv: list[str]) -> int:
             file=sys.stderr,
         )
         return 2
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
+    meta = store.read_json(meta_path)
     words = spark.read.parquet(args.filter)
     gated = bloom_gate(
         df, words, args.key_column, meta["n_bits"], meta["n_hashes"],

@@ -36,13 +36,15 @@ real corpus. The caller's contract: the corpus at that pointer still
 contains every indexed (id, text) row — the same immutability
 data lakes already guarantee for any derived artifact.
 
-Commit protocol (object-store safe): data is only ever written under
-generation-unique directory names; ``meta.json`` is (re)written LAST
-and is the single commit point. ``os.rename`` is never used — object
-stores don't honor atomic directory renames. A crash before the meta
-write leaves the old manifest pointing at the old (complete)
-generation; orphan ``bands-*`` dirs from crashed writes/compactions
-are garbage, not corruption, and are swept by the next write/compact.
+Commit protocol (``dbqt_spark.store``, crash-safe on local
+filesystems): data is only ever written under generation-unique
+directory names; ``meta.json`` is committed LAST (atomic temp-file
+replace) and is the single commit point. Data directories are never
+renamed. A crash at any point, the manifest commit included, leaves
+the old manifest pointing at the old (complete) generation; orphan
+``bands-*`` dirs from crashed writes/compactions are garbage, not
+corruption, and are swept by the next commit. Store I/O is
+local-filesystem only.
 
 Scale shape of a query: the crawl is band-hashed in ONE Arrow pass
 (``dedup.minhash_band_hashes``), its (id, band_key) rows BROADCAST
@@ -60,13 +62,10 @@ parity as ``minhash_cross_near_duplicates``).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from .dedup import (
     _attach_texts_and_verify,
     _cap_buckets,
@@ -77,14 +76,11 @@ from .dedup import (
 
 MINHASH_INDEX_BUCKETS = 32
 _FORMAT = "minhash_index_v2"
-
-
-def _meta_path(path: str) -> str:
-    return os.path.join(path, "meta.json")
+_LAYOUT = store.Layout("bands", legacy=False)
 
 
 def _bands_dir(path: str, generation: int) -> str:
-    return os.path.join(path, f"bands-{generation}")
+    return _LAYOUT.data_dir(path, generation)
 
 
 def _band_key_rows(
@@ -108,14 +104,9 @@ def _band_key_rows(
 
 
 def _load_meta(path: str) -> dict:
-    meta_path = _meta_path(path)
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no MinHash index at {path} (meta.json missing) — build one "
-            "with minhash_index_write first"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = store.read_manifest(
+        path, missing="build a MinHash index with minhash_index_write first"
+    )
     if meta.get("store_format") != _FORMAT:
         raise ValueError(
             f"MinHash index at {path} has store_format="
@@ -125,34 +116,6 @@ def _load_meta(path: str) -> dict:
             "corpus pointer)"
         )
     return meta
-
-
-def _tombstones_dir(path: str, t: int) -> str:
-    return os.path.join(path, f"tombstones-{t}")
-
-
-def _sweep_orphans(path: str, keep_generation: int) -> None:
-    """Best-effort removal of band/tombstone dirs not referenced by the
-    manifest (crashed writes/compactions/deletes). Never touches the
-    current generation or the live tombstone set."""
-    keep = os.path.basename(_bands_dir(path, keep_generation))
-    t = 0
-    try:
-        with open(_meta_path(path)) as f:
-            t = int(json.load(f).get("tombstone_generation", 0))
-    except (OSError, ValueError, json.JSONDecodeError):
-        pass
-    keep_tombs = f"tombstones-{t}" if t else None
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if os.path.isdir(full) and name.startswith("bands-") and name != keep:
-            shutil.rmtree(full, ignore_errors=True)
-        elif (
-            os.path.isdir(full)
-            and name.startswith("tombstones-")
-            and name != keep_tombs
-        ):
-            shutil.rmtree(full, ignore_errors=True)
 
 
 def minhash_index_write(
@@ -176,15 +139,7 @@ def minhash_index_write(
     ``corpus_location`` (optional) records where the corpus parquet
     lives so ``minhash_index_query`` can resolve verify texts without
     the caller re-passing the frame. The index never copies the texts."""
-    old_gen = None
-    meta_path = _meta_path(path)
-    if os.path.exists(meta_path):
-        try:
-            with open(meta_path) as f:
-                old_gen = int(json.load(f).get("generation", 0))
-        except (ValueError, json.JSONDecodeError):
-            old_gen = None
-    generation = (old_gen or 0) + 1
+    generation = _LAYOUT.next_generation(store.read_manifest(path))
     band_path = _bands_dir(path, generation)
     banded = _band_key_rows(
         df, "corpus_id", text_col, id_col, num_hashes, bands, shingle_n
@@ -205,7 +160,6 @@ def minhash_index_write(
             capped = _cap_buckets(banded, ["band_key"], max_bucket_size)
     else:
         capped = banded
-    os.makedirs(path, exist_ok=True)
     capped.write.mode("overwrite").parquet(band_path)
     if max_bucket_size is not None:
         banded.unpersist()
@@ -213,20 +167,19 @@ def minhash_index_write(
     # crash before this line leaves the previous manifest (if any)
     # pointing at its own complete generation — never new-parameter
     # bands under old-parameter meta.
-    with open(meta_path, "w") as f:
-        json.dump(
-            {
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_n": shingle_n,
-                "max_bucket_size": max_bucket_size,
-                "store_format": _FORMAT,
-                "generation": generation,
-                "corpus_location": corpus_location,
-            },
-            f,
-        )
-    _sweep_orphans(path, generation)
+    store.commit_manifest(
+        path,
+        {
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "shingle_n": shingle_n,
+            "max_bucket_size": max_bucket_size,
+            "store_format": _FORMAT,
+            "generation": generation,
+            "corpus_location": corpus_location,
+        },
+        _LAYOUT,
+    )
 
 
 def minhash_index_append(
@@ -284,93 +237,38 @@ def minhash_index_delete(spark: SparkSession, path: str, ids) -> None:
     involving them again; the next ``minhash_index_compact``
     physically drops their band rows (and the tombstones with them).
     ``ids`` is a DataFrame (first column) or an iterable of id values.
-
-    Same manifest discipline as every other mutation here: the union
-    of the live tombstone set and the new ids lands under the NEXT
-    tombstone-generation directory, meta.json rewrites LAST as the
-    single commit point, unreferenced tombstone dirs are swept. A
-    crash before the meta write leaves the old manifest pointing at
-    the old complete set — re-submitting after a crash unions in
-    idempotently. Exactly ONE live tombstone dir exists, so a probe
-    pays one bounded broadcast anti-join.
-
-    Semantics: deletion wins over later appends of the same id —
-    to re-admit an id, compact first (clears tombstones), then
-    append."""
-    meta = _load_meta(path)
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias("deleted_id"))
-    else:
-        vals = list(ids)
-        if not vals:
-            return
-        ids_df = spark.createDataFrame(
-            [(v,) for v in vals], ["deleted_id"]
-        )
-    t_old = int(meta.get("tombstone_generation", 0))
-    if t_old:
-        ids_df = ids_df.unionByName(
-            spark.read.parquet(_tombstones_dir(path, t_old))
-        )
-    t_new = t_old + 1
-    ids_df.distinct().coalesce(1).write.mode("overwrite").parquet(
-        _tombstones_dir(path, t_new)
-    )
-    # COMMIT POINT
-    meta["tombstone_generation"] = t_new
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
-    _sweep_orphans(path, int(meta["generation"]))
-
-
-def _without_deleted(
-    spark: SparkSession, path: str, meta: dict, df: DataFrame, col: str
-) -> DataFrame:
-    """Anti-join ``col`` against the live tombstone set (no-op when
-    none). The tombstone side broadcasts — deletes are tiny relative
-    to the corpus, the store scan never shuffles for them."""
-    t = int(meta.get("tombstone_generation", 0))
-    if not t:
-        return df
-    tombs = spark.read.parquet(_tombstones_dir(path, t)).select(
-        F.col("deleted_id").alias(col)
-    )
-    return df.join(F.broadcast(tombs), col, "left_anti")
+    Commit protocol and semantics: ``store.delete``."""
+    store.delete(spark, path, _load_meta(path), _LAYOUT, ids)
 
 
 def minhash_index_compact(spark: SparkSession, path: str) -> None:
     """Rewrite bands into ``MINHASH_INDEX_BUCKETS`` band_key-clustered,
     key-sorted files (appends leave files per batch). Offline
-    maintenance, object-store safe: the compacted data lands under a
-    NEW generation's directory name, the manifest is rewritten last
-    (the commit point), and the old generation is swept afterwards. A
-    crash anywhere leaves the manifest pointing at a complete
-    generation; half-written new dirs are orphans the next
-    write/compact removes."""
+    maintenance, crash-safe on local filesystems: the compacted data
+    lands under a NEW generation's directory name, the manifest is
+    committed last (the commit point), and the old generation is swept
+    afterwards. A crash anywhere leaves the manifest pointing at a
+    complete generation; half-written new dirs are orphans the next
+    commit removes."""
     meta = _load_meta(path)
-    old_generation = int(meta["generation"])
-    new_generation = old_generation + 1
+    new = store.compacted(meta)
     # compaction also PHYSICALLY drops tombstoned corpus ids (storage
     # reclaim for the takedown verb) — the same manifest commit below
     # publishes the clean generation and retires the tombstone set
-    bands = _without_deleted(
+    bands = store.without_tombstones(
         spark,
         path,
         meta,
-        spark.read.parquet(_bands_dir(path, old_generation)),
+        spark.read.parquet(_bands_dir(path, store.generation(meta))),
         "corpus_id",
     )
     (
         bands.repartition(MINHASH_INDEX_BUCKETS, "band_key")
         .sortWithinPartitions("band_key")
         .write.mode("overwrite")
-        .parquet(_bands_dir(path, new_generation))
+        .parquet(_bands_dir(path, new["generation"]))
     )
-    meta["generation"] = new_generation
-    meta.pop("tombstone_generation", None)
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
-    _sweep_orphans(path, new_generation)
+    store.commit_manifest(path, new, _LAYOUT)
 
 
 def minhash_index_query(
@@ -453,7 +351,7 @@ def minhash_index_query(
         q_capped = q_bands
     # tombstoned corpus ids never become candidates (deleted docs are
     # invisible the moment the delete commits, pre-compaction)
-    store_bands = _without_deleted(
+    store_bands = store.without_tombstones(
         spark, path, meta, spark.read.parquet(band_path), "corpus_id"
     )
     q_side = F.broadcast(q_capped) if broadcast_query else q_capped

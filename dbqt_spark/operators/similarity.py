@@ -24,6 +24,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
+
+# LSH and IVF indexes share one layout: ``vectors``/``vectors-<N>``
+# data dirs and (IVF only) ``centroids.json``/``centroids-<N>.json``
+_LAYOUT = store.Layout("vectors", sidecar="centroids")
+
 
 def _dot_lit(vec_col: Column, q: list[float]) -> Column:
     """dot(vec, literal query) — zip_with + aggregate, stays in codegen."""
@@ -362,197 +368,47 @@ def ivf_search(
 
 
 
-def _store_meta(path: str) -> dict:
-    """meta.json contents, or {} when absent (writers create it)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        return {}
-    with open(meta_path) as f:
-        return json.load(f)
-
-
 def _vectors_dir(path: str, meta: "dict | None" = None) -> str:
     """The CURRENT generation's vectors directory, resolved through the
     manifest: generation 0 keeps the legacy plain ``vectors`` name so
     existing indexes read unchanged; compaction bumps to
     ``vectors-<N>``. meta.json is the single commit point — data only
     ever lands under generation-unique names, so no reader can observe
-    a half-swapped store and no ``os.rename`` is needed (object stores
-    have no atomic directory rename)."""
-    import os
-
-    g = int((meta if meta is not None else _store_meta(path)).get(
-        "generation", 0
-    ))
-    name = "vectors" if g == 0 else f"vectors-{g}"
-    return os.path.join(path, name)
+    a half-swapped store and no directory is ever renamed."""
+    meta = store.read_manifest(path) if meta is None else meta
+    return _LAYOUT.data_dir(path, store.generation(meta))
 
 
-def _centroids_path(path: str, meta: "dict | None" = None) -> str:
-    """The CURRENT generation's centroids file, resolved through the
-    manifest exactly like ``_vectors_dir``: generation 0 keeps the
-    legacy plain ``centroids.json`` name; later generations are
-    ``centroids-<N>.json`` so a rebuild never overwrites the file the
-    live manifest still points at."""
-    import os
-
-    g = int((meta if meta is not None else _store_meta(path)).get(
-        "generation", 0
-    ))
-    name = "centroids.json" if g == 0 else f"centroids-{g}.json"
-    return os.path.join(path, name)
-
-
-def _next_generation(path: str) -> int:
-    """Generation for a (re)build: a fresh store starts at 0; rebuilding
-    over an existing manifest BUMPS the generation so new data/params
-    land under generation-unique names and the old manifest keeps
-    pointing at a complete, consistent store until the new meta.json
-    commits (the same protocol as ``minhash_index_write`` /
-    ``_compact_partitioned`` — never overwrite the live generation in
-    place)."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "meta.json")):
-        return 0
-    return int(_store_meta(path).get("generation", 0)) + 1
-
-
-def _sweep_vector_orphans(path: str, keep: str) -> None:
-    """Best-effort removal of vectors* dirs, centroids*.json files and
-    tombstones-* dirs the manifest no longer references (old
-    generations, crashed compactions/rebuilds/deletes)."""
-    import os
-    import shutil
-
-    keep_name = os.path.basename(keep)
-    meta = _store_meta(path)
-    g = int(meta.get("generation", 0))
-    keep_centroids = os.path.basename(_centroids_path(path, {"generation": g}))
-    t = int(meta.get("tombstone_generation", 0))
-    keep_tombs = f"tombstones-{t}" if t else None
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if (
-            os.path.isdir(full)
-            and (name == "vectors" or name.startswith("vectors-"))
-            and name != keep_name
-        ):
-            shutil.rmtree(full, ignore_errors=True)
-        elif (
-            os.path.isdir(full)
-            and name.startswith("tombstones-")
-            and name != keep_tombs
-        ):
-            shutil.rmtree(full, ignore_errors=True)
-        elif (
-            os.path.isfile(full)
-            and (name == "centroids.json" or name.startswith("centroids-"))
-            and name != keep_centroids
-        ):
-            try:
-                os.remove(full)
-            except OSError:
-                pass
-
-
-def _tombstones_dir(path: str, t: int) -> str:
-    import os
-
-    return os.path.join(path, f"tombstones-{t}")
-
-
-def _store_delete(spark, path: str, ids, id_col: str = "vec_id") -> None:
-    """Takedown/opt-out verb for the persisted ANN stores (VERDICT r12
-    #4): record ``ids`` as TOMBSTONES so no probe ever returns them
-    again; the next compaction physically drops their rows (and the
-    tombstones with them). ``ids`` is a DataFrame (first column) or an
-    iterable of id values.
-
-    Commit protocol (the store's manifest discipline): the union of
-    the current tombstone set and the new ids lands under the NEXT
-    tombstone-generation directory name, meta.json is rewritten LAST
-    as the single commit point, and unreferenced tombstone dirs are
-    swept. A crash before the meta write leaves the old manifest
-    pointing at the old (complete) tombstone set — ids re-submitted
-    after a crash simply union in idempotently. Exactly ONE live
-    tombstone dir exists at any time, so probes pay one bounded
-    anti-join, never a read-side merge of per-delete files.
-
-    Semantics: deletion wins over later appends of the same id
-    (takedown is per-id and permanent for this store's lifetime) —
-    to genuinely re-admit an id, compact first (clears tombstones)
-    and then append."""
-    import json
-    import os
-
-    meta = _store_meta(path)
-    if not meta:
-        raise ValueError(
-            f"no index at {path} (meta.json missing) — nothing to "
-            "delete from"
-        )
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias("deleted_id"))
-    else:
-        vals = list(ids)
-        if not vals:
-            return
-        ids_df = spark.createDataFrame(
-            [(v,) for v in vals], ["deleted_id"]
-        )
-    t_old = int(meta.get("tombstone_generation", 0))
-    if t_old:
-        ids_df = ids_df.unionByName(
-            spark.read.parquet(_tombstones_dir(path, t_old))
-        )
-    t_new = t_old + 1
-    ids_df.distinct().coalesce(1).write.mode("overwrite").parquet(
-        _tombstones_dir(path, t_new)
+def _live_vectors(spark, path: str, meta: dict) -> DataFrame:
+    """The current generation's vectors minus the live tombstone set,
+    keyed on the id column recorded at delete time."""
+    return store.without_tombstones(
+        spark,
+        path,
+        meta,
+        spark.read.parquet(_vectors_dir(path, meta)),
+        meta.get("tombstone_id_col", "vec_id"),
     )
-    # manifest LAST — the commit point
-    meta["tombstone_generation"] = t_new
-    meta["tombstone_id_col"] = id_col
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    _sweep_vector_orphans(path, _vectors_dir(path, meta))
-
-
-def _without_tombstones(
-    spark, path: str, meta: dict, df: DataFrame
-) -> DataFrame:
-    """Anti-join the store frame against the live tombstone set (no-op
-    when none): one bounded join keyed on the id column recorded at
-    delete time. The tombstone side is read in place — deletes are
-    tiny relative to the corpus, and the anti-join hashes THEM, never
-    the store scan."""
-    t = int(meta.get("tombstone_generation", 0))
-    if not t:
-        return df
-    id_col = meta.get("tombstone_id_col", "vec_id")
-    tombs = (
-        spark.read.parquet(_tombstones_dir(path, t))
-        .select(F.col("deleted_id").alias(id_col))
-    )
-    return df.join(F.broadcast(tombs), id_col, "left_anti")
 
 
 def lsh_delete(spark, path: str, ids, id_col: str = "vec_id") -> None:
-    """Tombstone ``ids`` in an ``lsh_write`` index — see
-    ``_store_delete``. Probes (``lsh_topk_from_index``) exclude them
-    immediately; ``lsh_compact`` drops their rows physically."""
-    _store_delete(spark, path, ids, id_col)
+    """Takedown/opt-out verb for the persisted ANN stores (VERDICT r12
+    #4): record ``ids`` as TOMBSTONES so no probe ever returns them
+    again (commit protocol and semantics: ``store.delete``). Probes
+    (``lsh_topk_from_index``) exclude them immediately; ``lsh_compact``
+    drops their rows, and the tombstones with them, physically."""
+    meta = store.read_manifest(path, missing="nothing to delete from")
+    store.delete(
+        spark, path, {**meta, "tombstone_id_col": id_col}, _LAYOUT, ids
+    )
 
 
 def ivf_delete(spark, path: str, ids, id_col: str = "vec_id") -> None:
-    """Tombstone ``ids`` in an ``ivf_write`` index — see
-    ``_store_delete``. ``ivf_load`` (hence every probe and the
-    streaming semantic gate) excludes them immediately;
+    """Tombstone ``ids`` in an ``ivf_write`` index — see ``lsh_delete``
+    (the two indexes share one store layout). ``ivf_load`` (hence every
+    probe and the streaming semantic gate) excludes them immediately;
     ``ivf_compact`` drops their rows physically."""
-    _store_delete(spark, path, ids, id_col)
+    lsh_delete(spark, path, ids, id_col)
 
 
 def lsh_write(
@@ -576,9 +432,12 @@ def lsh_write(
     a probe prunes to exactly the (table, bucket) directories within the
     Hamming radius of each table's query signature. Signatures come from
     ONE Arrow matmul per batch (``random_band_values``)."""
-    import json
-    import os
-
+    # rebuild over an existing store bumps the generation (ADVICE r10):
+    # data lands in a fresh generation dir while the old manifest still
+    # points at the complete old one; the manifest commit below is the
+    # only commit point. Read first: a remote path is refused before any
+    # Spark job runs.
+    generation = _LAYOUT.next_generation(store.read_manifest(path))
     if n_tables <= 1:
         planes = _hyperplanes_for(df, vec_col, n_planes, seed)
         dim = len(planes[0])
@@ -601,25 +460,21 @@ def lsh_write(
             ).alias("table", "bucket"),
         )
         part_cols = ["table", "bucket"]
-    # rebuild over an existing store bumps the generation (ADVICE r10):
-    # data lands in a fresh generation dir while the old manifest still
-    # points at the complete old one; meta.json below is the only commit
-    generation = _next_generation(path)
-    target = _vectors_dir(path, {"generation": generation})
-    banded.write.mode("overwrite").partitionBy(*part_cols).parquet(target)
+    banded.write.mode("overwrite").partitionBy(*part_cols).parquet(
+        _LAYOUT.data_dir(path, generation)
+    )
     # manifest LAST — the commit point
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_planes": n_planes,
-                "seed": seed,
-                "dim": dim,
-                "n_tables": int(n_tables),
-                "generation": generation,
-            },
-            f,
-        )
-    _sweep_vector_orphans(path, target)
+    store.commit_manifest(
+        path,
+        {
+            "n_planes": n_planes,
+            "seed": seed,
+            "dim": dim,
+            "n_tables": int(n_tables),
+            "generation": generation,
+        },
+        _LAYOUT,
+    )
 
 
 def lsh_append(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
@@ -633,11 +488,7 @@ def lsh_append(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     bucket directory; run ``lsh_compact`` periodically. Dimension is
     validated against the stored index — a mismatched append would
     silently truncate every future probe's ``zip_with`` dot product."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store.read_manifest(path, missing="build it with lsh_write first")
     dim = int(meta["dim"])
     df = _checked_vectors(df, vec_col, dim)
     if df.first() is None:
@@ -685,11 +536,7 @@ def _checked_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
 def lsh_compact(spark, path: str) -> None:
     """Rewrite the LSH index to one file per bucket directory (appends
     leave one file per bucket per batch). See ``_compact_partitioned``."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store.read_manifest(path, missing="build it with lsh_write first")
     cols = (
         ["table", "bucket"] if int(meta.get("n_tables", 1)) > 1 else ["bucket"]
     )
@@ -706,21 +553,19 @@ def _compact_partitioned(
     one. Small-file compaction is the standard lakehouse maintenance
     op (Delta OPTIMIZE / Iceberg rewrite_data_files); partition pruning
     is untouched because the directory layout is reproduced exactly.
-    Object-store safe: the compacted data lands under the NEXT
-    generation's directory name and the manifest (meta.json) is
-    rewritten LAST as the commit point — no ``os.rename``, which object
-    stores don't honor atomically. A crash anywhere leaves the manifest
-    pointing at a complete generation; half-written next-generation
-    dirs are orphans the next write/compact sweeps."""
-    import json
+    Crash-safe on local filesystems (``dbqt_spark.store``): the
+    compacted data lands under the NEXT generation's directory name and
+    the manifest (meta.json) is committed LAST as the commit point — no
+    directory is ever renamed. A crash anywhere, the manifest commit
+    included, leaves the manifest pointing at a complete generation;
+    half-written next-generation dirs are orphans the next commit
+    sweeps."""
     import os
 
-    meta = _store_meta(path)
-    src = _vectors_dir(path, meta)
-    if not os.path.exists(src):
+    meta = store.read_manifest(path)
+    if not os.path.exists(_vectors_dir(path, meta)):
         return
-    new_gen = int(meta.get("generation", 0)) + 1
-    dst = os.path.join(path, f"vectors-{new_gen}")
+    new = store.compacted(meta)
     cols = (
         [partition_cols] if isinstance(partition_cols, str) else partition_cols
     )
@@ -728,32 +573,22 @@ def _compact_partitioned(
     # storage reclaim): the new generation is written post-anti-join
     # and the same manifest commit clears the tombstone pointer
     (
-        _without_tombstones(spark, path, meta, spark.read.parquet(src))
+        _live_vectors(spark, path, meta)
         .repartition(*cols)
         .write.mode("overwrite")
         .partitionBy(*cols)
-        .parquet(dst)
+        .parquet(_LAYOUT.data_dir(path, new["generation"]))
     )
     # carry centroids (IVF stores only) to the new generation name
     # BEFORE the manifest commits, so the new meta never points at a
     # missing centroids file
-    old_centroids = _centroids_path(path, {"generation": meta.get(
-        "generation", 0
-    )})
+    old_centroids = _LAYOUT.sidecar_file(path, store.generation(meta))
     if os.path.exists(old_centroids):
-        import shutil
-
-        shutil.copyfile(
-            old_centroids, _centroids_path(path, {"generation": new_gen})
+        store.commit_json(
+            _LAYOUT.sidecar_file(path, new["generation"]),
+            store.read_json(old_centroids),
         )
-    meta["generation"] = new_gen
-    # the commit below both publishes the compacted (tombstone-free)
-    # generation and retires the tombstone set — one atomic meta write
-    meta.pop("tombstone_generation", None)
-    meta.pop("tombstone_id_col", None)
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    _sweep_vector_orphans(path, dst)
+    store.commit_manifest(path, new, _LAYOUT)
 
 
 def _hyperplanes_for(
@@ -813,11 +648,7 @@ def lsh_topk_from_index(
     ``test_ivf_probe_prunes_partitions``), exact-score only those
     vectors. ``where``/``allowed`` restrict candidates before scoring
     (filtered ANN — see ``_apply_probe_filters``)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store.read_manifest(path, missing="build it with lsh_write first")
     n_planes, seed = int(meta["n_planes"]), int(meta["seed"])
     n_tables = int(meta.get("n_tables", 1))
     dim = meta.get("dim")
@@ -827,9 +658,7 @@ def lsh_topk_from_index(
         raise ValueError(
             f"query dimension {len(query)} != index dimension {dim}"
         )
-    vectors = _without_tombstones(
-        spark, path, meta, spark.read.parquet(_vectors_dir(path, meta))
-    )
+    vectors = _live_vectors(spark, path, meta)
     if n_tables <= 1:
         planes = _hyperplanes(len(query), n_planes, seed)
         qsig = _query_signature(query, planes)
@@ -876,15 +705,11 @@ def ivf_write(
     sets the SCALE of normal quantization error, which is all the drift
     ratio needs; an extra full-corpus pass at write time would double
     the cost of building a 100 TB index for a statistic."""
-    import json
-    import os
-
     # rebuild over an existing store bumps the generation (ADVICE r10):
     # vectors AND centroids land under generation-unique names so the
     # old manifest keeps describing a complete, param-consistent store
     # until the new meta.json commits
-    generation = _next_generation(path)
-    target = _vectors_dir(path, {"generation": generation})
+    generation = _LAYOUT.next_generation(store.read_manifest(path))
     if compact_cells:
         # one file per cell instead of one per (task, cell): a
         # trigger-bounded store (streaming gate births the index from
@@ -894,26 +719,26 @@ def ivf_write(
         # default (a cell of a 100 TB store must not collapse to one
         # task).
         assigned = assigned.repartition("cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(target)
-    with open(_centroids_path(path, {"generation": generation}), "w") as f:
-        json.dump(centroids, f)
+    assigned.write.mode("overwrite").partitionBy("cell").parquet(
+        _LAYOUT.data_dir(path, generation)
+    )
+    store.commit_json(_LAYOUT.sidecar_file(path, generation), centroids)
     C = np.array(centroids, dtype=np.float64)
     qerr = _sample_quantization_error(assigned, C, vec_col)
     # manifest LAST — the commit point
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "dim": int(C.shape[1]),
-                "mean_sq_qerr": qerr,
-                # replication factor the index was built with — appends
-                # re-apply it so probe recall stays uniform across the
-                # original corpus and every appended batch
-                "n_assign": int(n_assign),
-                "generation": generation,
-            },
-            f,
-        )
-    _sweep_vector_orphans(path, target)
+    store.commit_manifest(
+        path,
+        {
+            "dim": int(C.shape[1]),
+            "mean_sq_qerr": qerr,
+            # replication factor the index was built with — appends
+            # re-apply it so probe recall stays uniform across the
+            # original corpus and every appended batch
+            "n_assign": int(n_assign),
+            "generation": generation,
+        },
+        _LAYOUT,
+    )
 
 
 _DRIFT_SAMPLE_ROWS = 10_000
@@ -957,19 +782,13 @@ def ivf_append(
 
     Appends add one file per touched cell directory; run ``ivf_compact``
     periodically."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"IVF index at {path} has no meta.json drift baseline — "
-            "rebuild it with ivf_write before appending"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    with open(_centroids_path(path, meta)) as f:
-        centroids = json.load(f)
+    meta = store.read_manifest(
+        path, missing="no drift baseline; rebuild it with ivf_write "
+        "before appending"
+    )
+    centroids = store.read_json(
+        _LAYOUT.sidecar_file(path, store.generation(meta))
+    )
     C = np.array(centroids, dtype=np.float64)
     df = _checked_vectors(df, vec_col, int(meta["dim"]))
     if df.first() is None:
@@ -998,8 +817,6 @@ def ivf_append(
 def ivf_compact(spark, path: str) -> None:
     """Rewrite the IVF index to one file per cell directory (appends
     leave one file per cell per batch). See ``_compact_partitioned``."""
-    import os
-
     _compact_partitioned(spark, path, "cell")
 
 
@@ -1007,16 +824,11 @@ def ivf_load(
     spark, path: str
 ) -> tuple[DataFrame, list[list[float]]]:
     """Load an index written by ``ivf_write``; pair with ``ivf_search``."""
-    import json
-    import os
-
-    meta = _store_meta(path)
-    assigned = _without_tombstones(
-        spark, path, meta, spark.read.parquet(_vectors_dir(path, meta))
+    meta = store.read_manifest(path, missing="build it with ivf_write first")
+    centroids = store.read_json(
+        _LAYOUT.sidecar_file(path, store.generation(meta))
     )
-    with open(_centroids_path(path, meta)) as f:
-        centroids = json.load(f)
-    return assigned, centroids
+    return _live_vectors(spark, path, meta), centroids
 
 
 def random_band_values(

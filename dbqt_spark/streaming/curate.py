@@ -17,8 +17,8 @@ stream-specific substitutions:
 
 Everything else (PII redaction, hash-split) is already a pure per-row
 function, so the sink is deterministic per batch and the
-manifest-committed publish (``publish.publish_batch`` — object-store
-safe, no renames) makes retries REPLACE a half-published batch (same
+marker-committed publish (``publish.publish_batch`` — crash-safe on
+local filesystems, no renames) makes retries REPLACE a half-published batch (same
 contract as ``streaming_decontaminate``).
 """
 

@@ -31,8 +31,8 @@ def streaming_decontaminate(
 ):
     """Wire decontamination into a stream: every micro-batch's clean
     rows land in ``out_dir/batch_id=N``, committed via the manifest
-    marker (``publish.publish_batch`` — object-store safe, a retry
-    REPLACES a half-published batch). The eval set's n-gram hashes are
+    marker (``publish.publish_batch`` — crash-safe on local
+    filesystems, a retry REPLACES a half-published batch). The eval set's n-gram hashes are
     computed ONCE and persisted for the stream's lifetime — a
     long-running stream must not re-tokenize the static benchmark on
     every trigger. Returns the StreamingQuery; read the output with

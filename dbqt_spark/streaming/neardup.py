@@ -48,12 +48,14 @@ to the driver, bounded by the bucket cap.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
+
 NEARDUP_STORE_BUCKETS = 32
+_LAYOUT = store.Layout("bands")
 
 from ..operators.dedup import (
     BROADCAST_PAIR_LIMIT,
@@ -62,28 +64,14 @@ from ..operators.dedup import (
 )
 
 
-def _read_meta(store_dir: str) -> dict:
-    import json
-
-    meta_path = os.path.join(store_dir, "meta.json")
-    if not os.path.exists(meta_path):
-        return {}
-    with open(meta_path) as f:
-        return json.load(f)
-
-
 def _store_paths(store_dir: str) -> tuple[str, str]:
     """(bands dir, docs dir), resolved through the manifest: bands live
     under a generation-suffixed name once ``compact_store`` has run
     (generation 0 keeps the legacy plain ``bands`` name so existing
     stores read unchanged). ``docs`` is append-only and never
     compacted/renamed, so it needs no generation."""
-    gen = int(_read_meta(store_dir).get("generation", 0))
-    band_name = "bands" if gen == 0 else f"bands-{gen}"
-    return (
-        os.path.join(store_dir, band_name),
-        os.path.join(store_dir, "docs"),
-    )
+    gen = store.generation(store.read_manifest(store_dir))
+    return _LAYOUT.data_dir(store_dir, gen), os.path.join(store_dir, "docs")
 
 
 def _check_store_params(
@@ -94,24 +82,20 @@ def _check_store_params(
     equi-join each other, so a parameter drift would silently admit
     every cross-batch near-duplicate (same precedent as
     ``similarity.lsh_write``'s meta.json)."""
-    import json
-
-    meta_path = os.path.join(store_dir, "meta.json")
     params = {
         "num_hashes": num_hashes,
         "bands": bands,
         "shingle_n": shingle_n,
     }
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            stored = json.load(f)
+    stored = store.read_manifest(store_dir)
+    if stored:
         if {k: stored.get(k) for k in params} != params:
             raise ValueError(
                 f"near-dup store at {store_dir} was built with {stored}; "
                 f"refusing to gate with {params} — matching would "
                 "silently fail"
             )
-        band_path, _ = _store_paths(store_dir)
+        band_path = _LAYOUT.data_dir(store_dir, store.generation(stored))
         # v2 (bucketed-table) band files are plain parquet with the same
         # (old_id, band_key) schema — readable as-is; only the pre-v2
         # (band_id, band_hash) schema needs a rebuild
@@ -126,9 +110,9 @@ def _check_store_params(
                 "docs into a fresh store_dir) before gating"
             )
         return
-    os.makedirs(store_dir, exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump({**params, "store_format": "plain_bands_v3"}, f)
+    store.commit_manifest(
+        store_dir, {**params, "store_format": "plain_bands_v3"}, _LAYOUT
+    )
 
 
 def _band_keys(
@@ -165,42 +149,27 @@ def compact_store(spark: SparkSession, store_dir: str) -> None:
     file-level zone maps) can skip files; for the broadcast candidate
     join the win is simply fewer, larger scan splits. Offline
     maintenance: run between gate invocations, not concurrently with
-    one. Object-store safe (no ``os.rename`` — object stores have no
-    atomic directory rename): the compacted bands land under the NEXT
-    generation's directory name, ``meta.json`` is rewritten LAST as the
+    one. Crash-safe on local filesystems (``dbqt_spark.store``; no
+    directory is ever renamed): the compacted bands land under the NEXT
+    generation's directory name, ``meta.json`` is committed LAST as the
     commit point, and stale generations are swept afterwards. A crash
-    anywhere leaves the manifest pointing at a complete generation — the
-    gate can never see an absent store and silently re-admit
-    near-duplicates; half-written next-generation dirs are orphans the
-    next compaction removes."""
-    import json
-
-    meta = _read_meta(store_dir)
-    band_path, _ = _store_paths(store_dir)
+    anywhere, the manifest commit included, leaves the manifest
+    pointing at a complete generation — the gate can never see an
+    absent store and silently re-admit near-duplicates; half-written
+    next-generation dirs are orphans the next compaction removes."""
+    meta = store.read_manifest(store_dir)
+    band_path = _LAYOUT.data_dir(store_dir, store.generation(meta))
     if not os.path.exists(band_path):
         return
-    old_gen = int(meta.get("generation", 0))
-    new_gen = old_gen + 1
-    new_path = os.path.join(store_dir, f"bands-{new_gen}")
+    new = store.compacted(meta)
     (
         spark.read.parquet(band_path)
         .repartition(NEARDUP_STORE_BUCKETS, "band_key")
         .sortWithinPartitions("band_key")
         .write.mode("overwrite")
-        .parquet(new_path)
+        .parquet(_LAYOUT.data_dir(store_dir, new["generation"]))
     )
-    meta["generation"] = new_gen
-    with open(os.path.join(store_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    keep = os.path.basename(new_path)
-    for name in os.listdir(store_dir):
-        full = os.path.join(store_dir, name)
-        if (
-            os.path.isdir(full)
-            and (name == "bands" or name.startswith("bands-"))
-            and name != keep
-        ):
-            shutil.rmtree(full, ignore_errors=True)
+    store.commit_manifest(store_dir, new, _LAYOUT)
 
 
 # The verify kernel is SHARED with the batch operator
@@ -560,9 +529,10 @@ def streaming_minhash_dedup(
     Idempotent under micro-batch retries (the foreachBatch contract):
     each batch's survivors land in their own ``out_dir/batch_id=N``
     partition, committed by the manifest marker
-    (``publish.publish_batch`` — object-store safe, no renames), so a
-    retry REPLACES a half-published batch instead of appending next to
-    it — no duplicate output rows in any failure window. The per-batch
+    (``publish.publish_batch`` — crash-safe on local filesystems, no
+    renames), so a retry REPLACES a half-published batch instead of
+    appending next to it — no duplicate output rows in any failure
+    window. The per-batch
     marker then short-circuits fully-processed batches, and the gate
     itself excludes self-pairs so a partially-appended store does not
     change a re-run's survivors. Read the output with
@@ -580,9 +550,11 @@ def streaming_minhash_dedup(
     whose pairs the within-batch candidates already carry)."""
     from .publish import committed_batches, publish_batch, read_published
 
+    store.require_local(store_dir, out_dir)
+
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(store_dir, "_batches", f"{batch_id}.done")
-        if os.path.exists(marker):
+        marker = (os.path.join(store_dir, "_batches"), f"{batch_id}.done")
+        if store.has_marker(*marker):
             return  # retried batch already fully processed
         corpus = None
         if not store_texts:
@@ -607,9 +579,7 @@ def streaming_minhash_dedup(
             out_dir,
             batch_id,
         )
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("")
+        store.write_marker(*marker)
 
     return (
         stream_df.writeStream.foreachBatch(gate)

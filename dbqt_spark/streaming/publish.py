@@ -1,17 +1,14 @@
-"""Object-store-safe micro-batch publication for foreachBatch sinks.
+"""Crash-safe micro-batch publication for foreachBatch sinks.
 
-The streaming sinks (``neardup``, ``curate``, ``decontaminate``) land
-each micro-batch's rows in ``out_dir/batch_id=N``. The original
-protocol staged under a hidden ``.inflight-N`` dir and published with
-one ``os.rename`` — atomic on POSIX, but object stores (where a 100 TB
-deployment's output lives) have no atomic directory rename, and plain
-``os.rename`` cannot even address a remote path. This module replaces
-the rename with a MANIFEST COMMIT:
+The streaming sinks (``neardup``, ``semgate``, ``curate``,
+``decontaminate``) land each micro-batch's rows in
+``out_dir/batch_id=N`` and commit them with a MARKER instead of a
+directory rename:
 
 1. write the batch's files directly into ``out_dir/batch_id=N``
    (mode("overwrite") — a retry truncates and rewrites the same dir);
-2. commit by writing the small marker ``out_dir/_committed/N`` LAST
-   (a single small PUT — atomic on every store).
+2. commit by creating the empty marker ``out_dir/_committed/N`` LAST
+   (``store.write_marker``; its existence is the commit).
 
 A crash between (1) and (2) leaves data files without a marker: not
 corruption, just an uncommitted batch the retry overwrites. Readers
@@ -20,7 +17,8 @@ that must be crash-consistent resolve through the manifest with
 still surfaces via partition-style dir names). Plain
 ``spark.read.parquet(out_dir)`` remains correct whenever the stream
 finished cleanly — the manifest is the contract for reading WHILE a
-stream runs or after a crash.
+stream runs or after a crash. The marker is written through Python
+file I/O, so ``out_dir`` is local-filesystem only.
 """
 
 from __future__ import annotations
@@ -29,11 +27,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import store
+
 _COMMITTED = "_committed"
-
-
-def _marker(out_dir: str, batch_id: int) -> str:
-    return os.path.join(out_dir, _COMMITTED, str(batch_id))
 
 
 def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
@@ -41,20 +37,16 @@ def publish_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
     the manifest. Idempotent under foreachBatch retries: the data write
     overwrites the whole dir, then the marker write (the commit point)
     is last — every crash window re-runs into the same final state."""
+    store.require_local(out_dir)
     final = os.path.join(out_dir, f"batch_id={batch_id}")
     df.write.mode("overwrite").parquet(final)
-    os.makedirs(os.path.join(out_dir, _COMMITTED), exist_ok=True)
-    with open(_marker(out_dir, batch_id), "w") as f:
-        f.write("")
+    store.write_marker(os.path.join(out_dir, _COMMITTED), str(batch_id))
 
 
 def committed_batches(out_dir: str) -> list[int]:
     """Batch ids with a commit marker, ascending."""
-    d = os.path.join(out_dir, _COMMITTED)
-    if not os.path.isdir(d):
-        return []
     out = []
-    for name in os.listdir(d):
+    for name in store.marker_names(os.path.join(out_dir, _COMMITTED)):
         try:
             out.append(int(name))
         except ValueError:

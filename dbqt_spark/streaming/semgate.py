@@ -60,9 +60,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.similarity import (
     _assign_cells,
-    _store_meta,
     ivf_append,
     ivf_build,
     ivf_knn_join,
@@ -228,7 +228,8 @@ def semantic_gate_batch(
     vecs = batch_df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).filter(F.col("__v").isNotNull())
-    has_index = os.path.exists(os.path.join(index_dir, "meta.json"))
+    meta = store.read_manifest(index_dir)
+    has_index = bool(meta)
     centroids = None
     assigned = None
     single_assign = True
@@ -237,9 +238,7 @@ def semantic_gate_batch(
         # single-assigned index => cells PARTITION the corpus, so the
         # probe join can never emit a (query, candidate) pair twice —
         # tell the kNN join to skip its replica-dedup exchange
-        single_assign = int(
-            _store_meta(index_dir).get("n_assign", 1)
-        ) == 1
+        single_assign = int(meta.get("n_assign", 1)) == 1
 
     # 1. within-batch first-wins over cell-blocked cosine pairs
     if exhaustive_within:
@@ -338,17 +337,17 @@ def streaming_semantic_dedup(
     from changing a re-run's survivors."""
     from .publish import publish_batch
 
+    store.require_local(index_dir, out_dir)
+
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(index_dir, "_batches", f"{batch_id}.done")
-        if os.path.exists(marker):
+        marker = (os.path.join(index_dir, "_batches"), f"{batch_id}.done")
+        if store.has_marker(*marker):
             return
         kept = semantic_gate_batch(
             batch_df, index_dir, threshold, vec_col, id_col, n_probes
         )
         publish_batch(kept, out_dir, batch_id)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("")
+        store.write_marker(*marker)
 
     return (
         stream_df.writeStream.foreachBatch(gate)

@@ -851,3 +851,154 @@ def test_minhash_index_delete_lifecycle(spark, tmp_path):
         d.startswith("tombstones-") for d in os.listdir(path)
     )
     assert probe_ids() == {1, 2}
+
+
+def test_torn_manifest_commit_keeps_previous_generation(
+    spark, tmp_path, monkeypatch
+):
+    """A crash midway through a manifest write (``json.dump`` dies after
+    half its text) must leave the previous manifest committed, for every
+    store kind: it still parses, probes and the gate answer exactly as
+    before the crash, and the next rebuild commits generation old+1
+    (not a fresh generation 1)."""
+    import json
+    import random
+    import shutil
+
+    from dbqt_spark.operators.minhash_index import (
+        minhash_index_query,
+        minhash_index_write,
+    )
+    from dbqt_spark.operators.similarity import lsh_delete
+    from dbqt_spark.streaming.neardup import compact_store, minhash_gate_batch
+
+    def torn_dump(obj, fp, *args, **kwargs):
+        text = json.dumps(obj, *args, **kwargs)
+        fp.write(text[: len(text) // 2])
+        raise OSError("simulated crash mid manifest write")
+
+    def crash(fn, *args):
+        with monkeypatch.context() as m:
+            m.setattr(json, "dump", torn_dump)
+            with pytest.raises(OSError, match="simulated crash"):
+                fn(*args)
+
+    def manifest(path):
+        with open(os.path.join(path, "meta.json")) as f:
+            return json.load(f)
+
+    base = (
+        "the quick brown fox jumps over the lazy dog again and again "
+        "while the band plays on through the long summer evening hours"
+    )
+    corpus = spark.createDataFrame(
+        [(1, base + " alpha"), (2, "spark shuffles and partition pruning "
+                                   "strategies for columnar scan engines")],
+        "doc_id long, text string",
+    )
+    crawl = spark.createDataFrame(
+        [(101, base + " gamma")], "doc_id long, text string"
+    )
+
+    # MinHash index: a torn rebuild commit
+    idx = str(tmp_path / "mhidx")
+    minhash_index_write(corpus, idx)
+    minhash_index_write(corpus, idx)
+
+    def probe():
+        return sorted(
+            map(tuple, minhash_index_query(
+                crawl, idx, threshold=0.5, corpus=corpus).collect())
+        )
+
+    before = probe()
+    assert [r[:2] for r in before] == [(101, 1)]
+    crash(minhash_index_write, corpus, idx)
+    assert manifest(idx)["generation"] == 2
+    assert probe() == before
+    # a temp file left by a writer killed mid-commit is swept
+    open(os.path.join(idx, ".meta.json.killed.tmp"), "w").close()
+    minhash_index_write(corpus, idx)
+    assert manifest(idx)["generation"] == 3
+    assert sorted(os.listdir(idx)) == ["bands-3", "meta.json"]
+    assert probe() == before
+
+    # LSH index: a torn delete commit deletes nothing
+    rng = random.Random(7)
+    vecs = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    lsh = str(tmp_path / "lsh")
+    lsh_write(emb, lsh, n_planes=4, seed=42)
+
+    def top():
+        return [
+            r["vec_id"]
+            for r in lsh_topk_from_index(spark, lsh, vecs[1], k=3).collect()
+        ]
+
+    before = top()
+    assert before[0] == 1
+    crash(lsh_delete, spark, lsh, [1])
+    assert "tombstone_generation" not in manifest(lsh)
+    assert top() == before
+
+    # near-dup gate store: a torn compaction commit
+    gate = str(tmp_path / "gate")
+    minhash_gate_batch(
+        spark.createDataFrame([(1, base + " alpha")], ["doc_id", "text"]),
+        gate,
+        threshold=0.5,
+    )
+    arrivals = spark.createDataFrame(
+        [(2, base + " beta"), (3, "entirely different fresh content " * 8)],
+        ["doc_id", "text"],
+    )
+    twin = str(tmp_path / "gate_twin")
+    shutil.copytree(gate, twin)
+    want = sorted(
+        r["id"]
+        for r in minhash_gate_batch(arrivals, twin, threshold=0.5).collect()
+    )
+    assert want == [3]
+    crash(compact_store, spark, gate)
+    assert manifest(gate).get("generation", 0) == 0
+    got = sorted(
+        r["id"]
+        for r in minhash_gate_batch(arrivals, gate, threshold=0.5).collect()
+    )
+    assert got == want
+
+
+def test_store_path_with_uri_scheme_is_refused(spark, tmp_path, monkeypatch):
+    """Store I/O is local-filesystem only: a store path with a URI scheme
+    is refused before any Spark job runs, instead of landing the
+    manifest in a local ``./s3a:`` directory while Hadoop writes the
+    parquet elsewhere."""
+    from dbqt_spark.operators.minhash_index import minhash_index_write
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
+    from dbqt_spark.streaming.publish import publish_batch
+
+    monkeypatch.chdir(tmp_path)
+    docs = spark.createDataFrame([(1, "some text here")], ["doc_id", "text"])
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0)], "vec_id long, embedding array<float>, cell int"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("uri-scheme-refusal", "store path validation")
+    try:
+        for call in (
+            lambda: minhash_index_write(docs, "s3a://b/idx"),
+            lambda: lsh_write(vecs, "s3a://b/lsh"),
+            lambda: ivf_write(vecs, [[1.0, 0.0]], "hdfs://nn/ivf"),
+            lambda: minhash_gate_batch(docs, "s3a://b/gate"),
+            lambda: publish_batch(docs, "s3a://b/out", 0),
+        ):
+            with pytest.raises(ValueError, match="local-filesystem only"):
+                call()
+        assert sc.statusTracker().getJobIdsForGroup("uri-scheme-refusal") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not (tmp_path / "s3a:").exists()
+    assert not (tmp_path / "hdfs:").exists()

@@ -520,7 +520,8 @@ def test_minhash_bucket_cap_drops_hot_bucket(spark):
     assert pairs == {(10_000, 10_001)}
 
     # sub-quadratic: without the cap the candidate join would emit
-    # 2000*1999/2 pairs per band; with it, only the planted pair survives
+    # n_hot*(n_hot-1)/2 pairs per band (300 hot docs); with it, only the
+    # planted pair survives
     sigs = minhash_signatures(df)
     n_cand = minhash_candidate_pairs(sigs, max_bucket_size=100).count()
     assert n_cand == 1

@@ -32,7 +32,7 @@ PARITY_SMOKE = [
     "event_funnel",
     "repetition_stats",
     "minhash_near_dups",
-    "ivf_topk",
+    "ivf_knn_join",
     "streaming_dedup",
     "incremental_profile",
     "wat_metadata",
@@ -42,6 +42,12 @@ PARITY_SMOKE = [
     "pagerank_dangling",
     "cdx_dedup",
 ]
+
+
+def test_parity_smoke_entries_have_oracles():
+    """A smoke entry with no oracle would never be parametrized — the
+    smoke gate would silently lack the surface it claims to cover."""
+    assert set(PARITY_SMOKE) <= set(ORACLE_NAMES)
 
 
 def _tiered(names):
