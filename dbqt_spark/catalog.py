@@ -194,13 +194,3 @@ def discover_tables(sf_dir: str) -> list[str]:
     ordered = [t for t in TPCH_TABLES if t in found]
     ordered += sorted(found - set(TPCH_TABLES))
     return ordered
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Register every table as a temp view for SQL access."""
-    dfs = load_tables(spark, sf_dir, tables)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

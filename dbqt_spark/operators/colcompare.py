@@ -128,16 +128,3 @@ def compare_columns(
 def datatype_mismatches(column_compare: DataFrame) -> DataFrame:
     """The 'Datatype Mismatches' report tab (colcompare.py:425-446)."""
     return column_compare.filter(F.col("status") == STATUS_DIFFERENT)
-
-
-def compare_summary(column_compare: DataFrame) -> DataFrame:
-    """Per-table rollup: counts of each status (report-shape aggregation)."""
-    return (
-        column_compare.groupBy("table_name")
-        .pivot(
-            "status",
-            [STATUS_MATCHING, STATUS_DIFFERENT, STATUS_SOURCE_ONLY, STATUS_TARGET_ONLY],
-        )
-        .count()
-        .na.fill(0)
-    )

@@ -4,30 +4,14 @@ Reference behavior (dbqt/tools/dynamic_query.py:14-62): read a single-column
 CSV of values, substitute each into a ``{var_from_csv}`` SQL template, run
 sequentially, append results to a log sink with ``-- Query for:`` headers.
 
-Spark design: each substituted query is ``spark.sql`` text; results are
-unioned with the driving value as a column (one job instead of N), or
-returned per-value for the faithful log-sink shape.
+Spark design: each substituted query is ``spark.sql`` text, returned
+per value for the faithful log-sink shape. The CSV read is
+``config.read_csv_list``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def read_value_list(path: str, column_name: str) -> list[str]:
-    """Single-column CSV with header-skip heuristic
-    (dbqt/tools/utils.py:25-36): first row equal (case-insensitive) to the
-    column name is a header."""
-    values = []
-    with open(path) as f:
-        for line in f:
-            v = line.strip()
-            if v:
-                values.append(v)
-    if values and values[0].lower() == column_name.lower():
-        values = values[1:]
-    return values
 
 
 def run_dynamic_queries(
@@ -40,26 +24,6 @@ def run_dynamic_queries(
     return [
         (v, spark.sql(template.format(**{var_name: v}))) for v in values
     ]
-
-
-def run_dynamic_queries_unioned(
-    spark: SparkSession,
-    template: str,
-    values: list[str],
-    var_name: str = "var_from_csv",
-) -> DataFrame:
-    """Scale shape: one unioned plan, driving value as a column. Requires
-    each substituted query to produce the same schema."""
-    parts = [
-        spark.sql(template.format(**{var_name: v})).withColumn(
-            "query_value", F.lit(v)
-        )
-        for v in values
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def generate_table_from_query(

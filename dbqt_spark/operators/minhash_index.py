@@ -3,11 +3,16 @@
 Beyond the reference surface (north star). ``minhash_cross_near_duplicates``
 needs both frames live, so deduping every new crawl against a 100 TB
 corpus would re-band the corpus per crawl. This module bands the corpus
-ONCE into an on-disk index and lets every future crawl probe it — the
-batch twin of the streaming gate's store (``streaming/neardup.py``),
-promoted to a first-class write/append/query/compact lifecycle
-(mirroring the ANN stores' ``lsh_write``/``ivf_append`` contracts in
-``operators/similarity.py``).
+ONCE into an on-disk index and lets every future crawl probe it, as a
+write/append/query/compact/delete lifecycle (mirroring the ANN stores'
+``lsh_write``/``ivf_append`` contracts in ``operators/similarity.py``).
+
+It is the only code that knows the MinHash band-store layout. The
+streaming near-dup gate (``streaming/neardup.py``) keeps its state in a
+MinHash index through the helpers below (``_open_index``,
+``_band_key_rows``, ``_live_bands``, ``_append_capped``), so a gate store
+is an index: ``minhash_index_query`` probes it, ``minhash_index_delete``
+tombstones it and ``minhash_index_compact`` compacts it.
 
 Layout at ``path`` (v2)::
 
@@ -18,6 +23,9 @@ Layout at ``path`` (v2)::
     tombstones-<T>/ parquet (deleted_id) — the live takedown set
                     (``minhash_index_delete``); probes anti-join it,
                     compaction physically drops the rows and retires it
+
+A gate store in stored-text mode also holds the gate's own append-only
+``docs/`` directory; no index verb reads it and no commit sweeps it.
 
 The index stores NO corpus content. v1 kept a ``docs/`` directory of
 ``(corpus_id, text)`` for the exact-Jaccard verify — a second copy of
@@ -51,8 +59,8 @@ Scale shape of a query: the crawl is band-hashed in ONE Arrow pass
 against the band scan — the index side is read in place with no shuffle
 at any index size (the same plan property as the streaming gate's
 candidate join) — and the verify is ``dedup._attach_texts_and_verify``,
-the SAME kernel as the live-frames operator and the streaming gate
-(verdict parity by construction): only candidate-involved docs' texts
+the SAME Jaccard kernel as the live-frames operator and the streaming
+gate (verdict parity by construction): only candidate-involved docs' texts
 ever move, via id-pruned scans of the crawl and the corpus pointer.
 Bucket caps apply symmetrically: the stored bands are capped per
 append batch, the query side per probe, with drops observable through
@@ -61,6 +69,8 @@ parity as ``minhash_cross_near_duplicates``).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,8 +104,9 @@ def _band_key_rows(
 ) -> DataFrame:
     """(out_id, band_key) rows — one Arrow pass, band id folded into a
     single join key (a cross-band xxhash64 collision only adds a
-    candidate the exact verify discards)."""
-    return _spread(df).select(
+    candidate the exact verify discards). The caller decides whether to
+    ``_spread`` ``df`` first: the index verbs do, the gate does not."""
+    return df.select(
         F.col(id_col).alias(out_id),
         F.posexplode(
             minhash_band_hashes(text_col, num_hashes, bands, shingle_n)
@@ -103,19 +114,126 @@ def _band_key_rows(
     ).select(out_id, F.xxhash64("band_id", "band_hash").alias("band_key"))
 
 
+def _manifest(
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    max_bucket_size: int | None,
+    generation: int,
+    corpus_location: str | None = None,
+) -> dict:
+    return {
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "shingle_n": shingle_n,
+        "max_bucket_size": max_bucket_size,
+        "store_format": _FORMAT,
+        "generation": generation,
+        "corpus_location": corpus_location,
+    }
+
+
 def _load_meta(path: str) -> dict:
     meta = store.read_manifest(
         path, missing="build a MinHash index with minhash_index_write first"
     )
-    if meta.get("store_format") != _FORMAT:
+    fmt = meta.get("store_format")
+    if fmt != _FORMAT:
+        rebuild = (
+            "re-run minhash_gate_batch over the accepted docs into a fresh "
+            "store_dir (gate stores now keep their state in a MinHash index)"
+            if fmt == "plain_bands_v3"
+            else "rebuild with minhash_index_write (v1 duplicated corpus "
+            "text into the index; v2 stores bands only and resolves texts "
+            "through a corpus pointer)"
+        )
         raise ValueError(
-            f"MinHash index at {path} has store_format="
-            f"{meta.get('store_format')!r}, expected {_FORMAT!r} — rebuild "
-            "with minhash_index_write (v1 duplicated corpus text into the "
-            "index; v2 stores bands only and resolves texts through a "
-            "corpus pointer)"
+            f"MinHash index at {path} has store_format={fmt!r}, expected "
+            f"{_FORMAT!r} — {rebuild}"
         )
     return meta
+
+
+def _open_index(
+    path: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    max_bucket_size: int | None,
+) -> dict:
+    """The manifest of the index at ``path``, committing an empty
+    index's manifest first when there is none. Refuses an index built
+    with other banding parameters: bands computed under different
+    (num_hashes, bands, shingle_n) never equi-join each other, so a
+    parameter drift would silently miss every near-duplicate across
+    batches."""
+    if not store.read_manifest(path):
+        meta = _manifest(
+            num_hashes, bands, shingle_n, max_bucket_size,
+            _LAYOUT.next_generation({}),
+        )
+        store.commit_manifest(path, meta, _LAYOUT)
+        return meta
+    meta = _load_meta(path)
+    params = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n}
+    stored = {k: meta.get(k) for k in params}
+    if stored != params:
+        raise ValueError(
+            f"MinHash index at {path} was built with {stored}; refusing "
+            f"to gate with {params} — matching would silently fail"
+        )
+    return meta
+
+
+def _live_bands(
+    spark: SparkSession, path: str, meta: dict
+) -> DataFrame | None:
+    """The live (corpus_id, band_key) rows: the manifest's generation
+    minus tombstoned ids (no anti-join when there are none). ``None``
+    while an index opened by ``_open_index`` has no bands yet."""
+    band_path = _bands_dir(path, store.generation(meta))
+    if not os.path.exists(band_path):
+        return None
+    return store.without_tombstones(
+        spark, path, meta, spark.read.parquet(band_path), "corpus_id"
+    )
+
+
+def _append_capped(path: str, meta: dict, rows: DataFrame) -> None:
+    """Append (corpus_id, band_key) rows that are already bucket-capped
+    to the live generation (compaction merges the per-append files)."""
+    rows.write.mode("append").parquet(
+        _bands_dir(path, store.generation(meta))
+    )
+
+
+def _capped(
+    banded: DataFrame, cap: int, drop_stats: dict | None
+) -> DataFrame:
+    """``banded`` (caller-persisted) without its oversized buckets.
+    Drop accounting requested -> eager cap (separate probe job, stats +
+    LocalRelation anti-join). Otherwise the cap stays LAZY: its size
+    aggregate rides the consuming job as a broadcast subtree over the
+    persisted bands — no separate probe job (r16; the eager probe cost
+    a 4-job executeTake ramp per lifecycle step)."""
+    if drop_stats is not None:
+        return _cap_buckets_eager(banded, ["band_key"], cap, drop_stats)
+    return _cap_buckets(banded, ["band_key"], cap)
+
+
+def _write_capped(
+    banded: DataFrame,
+    band_path: str,
+    mode: str,
+    cap: int | None,
+    drop_stats: dict | None,
+) -> None:
+    if cap is None:
+        banded.write.mode(mode).parquet(band_path)
+        return
+    banded = banded.persist()
+    _capped(banded, cap, drop_stats).write.mode(mode).parquet(band_path)
+    banded.unpersist()
 
 
 def minhash_index_write(
@@ -140,44 +258,24 @@ def minhash_index_write(
     lives so ``minhash_index_query`` can resolve verify texts without
     the caller re-passing the frame. The index never copies the texts."""
     generation = _LAYOUT.next_generation(store.read_manifest(path))
-    band_path = _bands_dir(path, generation)
     banded = _band_key_rows(
-        df, "corpus_id", text_col, id_col, num_hashes, bands, shingle_n
+        _spread(df), "corpus_id", text_col, id_col, num_hashes, bands,
+        shingle_n,
     )
-    if max_bucket_size is not None:
-        # drop accounting requested -> eager cap (separate probe job,
-        # stats + LocalRelation anti-join). Otherwise the cap stays
-        # LAZY: its size aggregate rides the write job as a broadcast
-        # subtree over the persisted bands — no separate probe job
-        # (r16; the eager probe cost a 4-job executeTake ramp per
-        # lifecycle step).
-        banded = banded.persist()
-        if drop_stats is not None:
-            capped = _cap_buckets_eager(
-                banded, ["band_key"], max_bucket_size, drop_stats
-            )
-        else:
-            capped = _cap_buckets(banded, ["band_key"], max_bucket_size)
-    else:
-        capped = banded
-    capped.write.mode("overwrite").parquet(band_path)
-    if max_bucket_size is not None:
-        banded.unpersist()
+    _write_capped(
+        banded, _bands_dir(path, generation), "overwrite", max_bucket_size,
+        drop_stats,
+    )
     # COMMIT POINT: the manifest write publishes the new generation. A
     # crash before this line leaves the previous manifest (if any)
     # pointing at its own complete generation — never new-parameter
     # bands under old-parameter meta.
     store.commit_manifest(
         path,
-        {
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_n": shingle_n,
-            "max_bucket_size": max_bucket_size,
-            "store_format": _FORMAT,
-            "generation": generation,
-            "corpus_location": corpus_location,
-        },
+        _manifest(
+            num_hashes, bands, shingle_n, max_bucket_size, generation,
+            corpus_location,
+        ),
         _LAYOUT,
     )
 
@@ -192,21 +290,16 @@ def minhash_index_append(
     """Append a corpus batch's bands to the CURRENT generation. The
     banding parameters come from meta.json — bands computed under
     different (num_hashes, bands, shingle_n) never equi-join each
-    other, so a parameter drift would silently miss every cross-batch
-    near-dup (same refusal contract as the streaming gate's
-    ``_check_store_params``). The per-batch bucket cap is re-applied;
-    note a band_key can still accrue up to cap x n_batches rows across
-    appends — the same documented caveat as the gate's store. Bands are
-    the ONLY stored artifact, so the v1 hazard of a partial append
-    (bands committed, docs not — candidates silently dropped at the
-    verify's inner text join) no longer exists; the corpus pointer is
-    the caller's, updated on their side before or after, and an
-    indexed id missing from it fails the probe loudly via
-    ``verify_missing`` accounting in minhash_index_query."""
+    other, so the stored ones are the only safe choice. The per-batch
+    bucket cap is re-applied; note a band_key can still accrue up to
+    cap x n_batches rows across appends. Bands are the ONLY stored
+    artifact, so a partial append cannot leave bands without texts;
+    the corpus pointer is the caller's, updated on their side before
+    or after, and an indexed id missing from it fails the probe loudly
+    via ``verify_missing`` accounting in minhash_index_query."""
     meta = _load_meta(path)
-    band_path = _bands_dir(path, int(meta["generation"]))
     banded = _band_key_rows(
-        df,
+        _spread(df),
         "corpus_id",
         text_col,
         id_col,
@@ -215,53 +308,44 @@ def minhash_index_append(
         int(meta["shingle_n"]),
     )
     cap = meta.get("max_bucket_size")
-    if cap is not None:
-        # same lazy/eager split as minhash_index_write (r16)
-        banded = banded.persist()
-        if drop_stats is not None:
-            capped = _cap_buckets_eager(
-                banded, ["band_key"], int(cap), drop_stats
-            )
-        else:
-            capped = _cap_buckets(banded, ["band_key"], int(cap))
-    else:
-        capped = banded
-    capped.write.mode("append").parquet(band_path)
-    if cap is not None:
-        banded.unpersist()
+    _write_capped(
+        banded,
+        _bands_dir(path, store.generation(meta)),
+        "append",
+        None if cap is None else int(cap),
+        drop_stats,
+    )
 
 
 def minhash_index_delete(spark: SparkSession, path: str, ids) -> None:
     """Takedown/opt-out verb (VERDICT r12 #4): record corpus ids as
-    TOMBSTONES so ``minhash_index_query`` never returns a pair
-    involving them again; the next ``minhash_index_compact``
-    physically drops their band rows (and the tombstones with them).
-    ``ids`` is a DataFrame (first column) or an iterable of id values.
-    Commit protocol and semantics: ``store.delete``."""
+    TOMBSTONES so ``minhash_index_query`` (and a gate over the index)
+    never returns a pair involving them again; the next
+    ``minhash_index_compact`` physically drops their band rows (and the
+    tombstones with them). ``ids`` is a DataFrame (first column) or an
+    iterable of id values. Commit protocol and semantics:
+    ``store.delete``."""
     store.delete(spark, path, _load_meta(path), _LAYOUT, ids)
 
 
 def minhash_index_compact(spark: SparkSession, path: str) -> None:
     """Rewrite bands into ``MINHASH_INDEX_BUCKETS`` band_key-clustered,
     key-sorted files (appends leave files per batch). Offline
-    maintenance, crash-safe on local filesystems: the compacted data
+    maintenance — run it between gate invocations, not concurrently
+    with one — crash-safe on local filesystems: the compacted data
     lands under a NEW generation's directory name, the manifest is
     committed last (the commit point), and the old generation is swept
     afterwards. A crash anywhere leaves the manifest pointing at a
     complete generation; half-written new dirs are orphans the next
-    commit removes."""
+    commit removes. An index with no bands yet is left as it is."""
     meta = _load_meta(path)
-    new = store.compacted(meta)
     # compaction also PHYSICALLY drops tombstoned corpus ids (storage
     # reclaim for the takedown verb) — the same manifest commit below
     # publishes the clean generation and retires the tombstone set
-    bands = store.without_tombstones(
-        spark,
-        path,
-        meta,
-        spark.read.parquet(_bands_dir(path, store.generation(meta))),
-        "corpus_id",
-    )
+    bands = _live_bands(spark, path, meta)
+    if bands is None:
+        return
+    new = store.compacted(meta)
     (
         bands.repartition(MINHASH_INDEX_BUCKETS, "band_key")
         .sortWithinPartitions("band_key")
@@ -309,7 +393,6 @@ def minhash_index_query(
     The result is localCheckpoint-ed (no lineage back to the probe
     caches, which are released before returning)."""
     meta = _load_meta(path)
-    band_path = _bands_dir(path, int(meta["generation"]))
     spark = query_df.sparkSession
     if corpus is None:
         loc = meta.get("corpus_location")
@@ -321,7 +404,7 @@ def minhash_index_query(
             )
         corpus = spark.read.parquet(loc)
     q_bands = _band_key_rows(
-        query_df,
+        _spread(query_df),
         "query_id",
         text_col,
         id_col,
@@ -329,31 +412,26 @@ def minhash_index_query(
         int(meta["bands"]),
         int(meta["shingle_n"]),
     )
+    q_capped = q_bands
     if max_bucket_size is not None:
         q_bands = q_bands.persist()
+        stats = None if drop_stats is None else {}
+        q_capped = _capped(q_bands, max_bucket_size, stats)
         if drop_stats is not None:
-            stats: dict = {}
-            q_capped = _cap_buckets_eager(
-                q_bands, ["band_key"], max_bucket_size, stats
-            )
             drop_stats["query"] = stats
             # stored-side drops happened at write/append time; surface
             # the cap so callers know the symmetric guard was applied
             drop_stats["index"] = {
                 "max_bucket_size": meta.get("max_bucket_size")
             }
-        else:
-            # no drop accounting requested -> lazy cap: the size
-            # aggregate rides the candidate-count job as a broadcast
-            # subtree over the persisted query bands (r16)
-            q_capped = _cap_buckets(q_bands, ["band_key"], max_bucket_size)
-    else:
-        q_capped = q_bands
     # tombstoned corpus ids never become candidates (deleted docs are
-    # invisible the moment the delete commits, pre-compaction)
-    store_bands = store.without_tombstones(
-        spark, path, meta, spark.read.parquet(band_path), "corpus_id"
-    )
+    # invisible the moment the delete commits, pre-compaction); a gate
+    # store before its first append has no bands and so no candidates
+    store_bands = _live_bands(spark, path, meta)
+    if store_bands is None:
+        store_bands = q_bands.select(
+            F.col("query_id").alias("corpus_id"), "band_key"
+        ).limit(0)
     q_side = F.broadcast(q_capped) if broadcast_query else q_capped
     cands = (
         q_side.join(store_bands, "band_key")

@@ -11,7 +11,7 @@ sizing — is real and tested.
 
 Scale notes: binary payloads should be size-bounded per row (<~100 MB,
 parquet/Arrow cell limits); big media belongs in object storage with a
-path column, which ``attach_media_meta`` also supports. ``mapInPandas``
+path column (the metadata struct's ``uri`` field). ``mapInPandas``
 processes Arrow batches, so per-row Python overhead is amortized; tune
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` for large payloads.
 """
@@ -33,24 +33,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("uri", T.StringType(), True),  # when payload is external
     ]
 )
-
-
-def attach_media_meta(
-    df: DataFrame,
-    content_col: str = "content",
-    media_type: str = "image",
-    fmt: str = "bin",
-) -> DataFrame:
-    """Derive the metadata struct from an inline binary column."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.length(F.col(content_col)).cast("long").alias("size_bytes"),
-            F.lit(None).cast("string").alias("uri"),
-        ),
-    )
 
 
 _FEATURE_DIM = 8

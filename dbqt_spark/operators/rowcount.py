@@ -6,11 +6,14 @@ counts merged into a frame with ``difference`` / ``percentage_difference``
 derived columns (dbqt/tools/dbstats.py:155-214); failures become ``notes``
 rows (never abort).
 
-Spark design: all per-table counts are expressed as one unioned DataFrame
-(one Spark job, stages run in parallel across the cluster — the analog of
-the reference's connection pool, but scheduler-driven). Counting a parquet
-table reads no data columns (count-star scan), so this is metadata-bound
-even at 100 TB.
+Spark design: each table gets its own global count aggregate and the
+per-table results are unioned into one DataFrame. Collecting it runs
+about one Spark job per table plus one (measured at local[4]: 8 jobs and
+15 stages for 7 parquet tables), scheduled by Spark rather than by a
+connection pool. A union of the scans with one ``groupBy`` would run
+fewer jobs, but it would drop a table with zero rows instead of
+reporting a count of 0. Counting a parquet table reads no data columns
+(count-star scan), so this is metadata-bound even at 100 TB.
 """
 
 from __future__ import annotations

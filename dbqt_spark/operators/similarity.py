@@ -10,8 +10,6 @@ North-star operator (no reference analog). Two tiers:
   into a bit signature) pre-filters candidates to matching buckets before
   exact scoring — the 100 TB path where scanning every vector per query
   is wasteful. Hyperplanes are derived deterministically from a seed.
-- ``knn_join_brute``: all-pairs k-NN between two (small) sets via
-  broadcast cross join — utility for evaluation.
 """
 
 from __future__ import annotations
@@ -1121,45 +1119,6 @@ def embedding_blocked_nn(
 
     return _eager_capped_result(
         banded, [*key_cols, "__band", "__bval"], max_block_size, drop_stats, build
-    )
-
-
-def knn_join_brute(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """All-pairs k-NN via broadcast cross join + window top-k. Only for a
-    small ``right`` side (it is broadcast); for large×large use the LSH
-    bucketing to band both sides first."""
-    from pyspark.sql import Window
-
-    # norms evaluate below the cross join — once per input row, not
-    # once per pair (same hoist as ivf_knn_join; bit-identical doubles)
-    l = left.select(
-        F.col(id_col).alias("left_id"), F.col(vec_col).alias("__lv")
-    ).withColumn("__ln", _norm(F.col("__lv")))
-    r = right.select(
-        F.col(id_col).alias("right_id"), F.col(vec_col).alias("__rv")
-    ).withColumn("__rn2", _norm(F.col("__rv")))
-    dot = F.aggregate(
-        F.zip_with("__lv", "__rv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("__ln") * F.col("__rn2"))
-    scored = (
-        l.crossJoin(F.broadcast(r))
-        .filter(F.col("left_id") != F.col("right_id"))
-        .select("left_id", "right_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("left_id").orderBy(F.desc("cosine"), F.col("right_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
     )
 
 

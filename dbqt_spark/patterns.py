@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -47,9 +47,3 @@ def exclusion_condition(col: Column, patterns: list[str]) -> Column:
         m = F.upper(col).rlike(pattern_to_regex(p))
         cond = m if cond is None else (cond | m)
     return ~cond
-
-
-def filter_excluded_rows(
-    df: DataFrame, column: str, patterns: list[str]
-) -> DataFrame:
-    return df.filter(exclusion_condition(F.col(column), patterns))

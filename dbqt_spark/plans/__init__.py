@@ -30,14 +30,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    return [
-        m.group(1)
-        for line in formatted_plan(df).splitlines()
-        if (m := re.search(r"ReadSchema: (struct<.*>)", line))
-    ]
-
-
 def count_nodes(df: DataFrame, node: str) -> int:
     """Count physical nodes of a kind, e.g. 'Scan parquet', 'Exchange',
     'BroadcastHashJoin' (formatted mode lists each node once)."""

@@ -48,14 +48,3 @@ def format_nullcheck_report(results: dict[str, dict[str, int]]) -> str:
 def write_nullcheck_report(path: str, results: dict[str, dict[str, int]]) -> None:
     with open(path, "w") as f:
         f.write(format_nullcheck_report(results))
-
-
-def format_table_md(columns: list[str], rows: list[tuple]) -> str:
-    """Generic small-result markdown table."""
-    head = "| " + " | ".join(columns) + " |"
-    sep = "| " + " | ".join("---" for _ in columns) + " |"
-    body = [
-        "| " + " | ".join("" if v is None else str(v) for v in r) + " |"
-        for r in rows
-    ]
-    return "\n".join([head, sep, *body]) + "\n"

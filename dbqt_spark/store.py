@@ -1,10 +1,12 @@
 """The commit protocol shared by every persisted store.
 
 The MinHash band index (``operators/minhash_index.py``), the LSH and IVF
-vector indexes (``operators/similarity.py``), the streaming gate stores
-(``streaming/neardup.py``, ``streaming/semgate.py``), the foreachBatch
-publish markers (``streaming/publish.py``) and the bloom-filter sidecar
-all keep their state the same way: data lands under generation-named
+vector indexes (``operators/similarity.py``), the foreachBatch publish
+markers (``streaming/publish.py``) and the bloom-filter sidecar all keep
+their state the same way (the streaming gates hold no store code of
+their own: ``streaming/neardup.py`` keeps a MinHash index,
+``streaming/semgate.py`` an IVF index, and both record finished
+micro-batches with markers): data lands under generation-named
 directories, and one small JSON manifest (``meta.json``) says which
 generation is live. This module is the only code that reads or commits
 a manifest:

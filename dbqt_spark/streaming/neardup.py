@@ -1,5 +1,5 @@
-"""Streaming NEAR-duplicate ingest gate — MinHash against an
-accumulated store.
+"""Streaming NEAR-duplicate ingest gate — MinHash against an index of
+the accepted docs.
 
 ``streaming/dedup.py`` gates exact duplicates; this module is the next
 stage of the corpus front door: drop arriving documents that are
@@ -13,164 +13,56 @@ Per micro-batch (``minhash_gate_batch``):
 
 1. band-hash the batch's documents (ONE Arrow pandas_udf —
    ``operators.dedup.minhash_band_hashes``),
-2. equi-join those bands against the persisted band store (only
+2. equi-join those bands against the index's live bands (only
    documents sharing an LSH bucket are candidates — never all-pairs),
 3. exact-verify candidates with n-gram Jaccard against the stored
    texts (broadcast of the candidate ids only),
 4. greedily keep batch survivors: within the batch, earlier ids win
    (driver-side greedy over the bounded verified pair set — the same
    first-wins contract ``dropDuplicates`` gives exact dedup),
-5. append the survivors' bands + texts to the store (parquet).
+5. append the survivors' bands (and, in stored-text mode, texts) to
+   the store.
 
-Scale notes: the band store is plain parquet keyed by
-``band_key = xxhash64(band_id, band_hash)`` and step 2's candidate join
-BROADCASTS the arriving batch's band keys (micro-batch x bands rows of
-two longs — megabytes at any realistic trigger size), so the store side
-is scanned in place with NO shuffle at any store size
-(``test_neardup_store_join_no_store_exchange``). This replaced an r7
-interim design that kept the store as a catalog-registered bucketed
-table: the bucketed layout also avoided the store-side exchange, but
-paid seconds of metastore/commit overhead PER micro-batch append —
-measured 4.5-35 s per ``saveAsTable`` vs 0.2 s for the plain append —
-which dwarfs the shuffle it saved; broadcast achieves the same plan
-property for free. (If micro-batches ever grow past broadcastable, the
-co-bucketed catalog table is the right alternative and
-``partitioning.write_bucketed`` provides it.) A band_key collision
-across different bands merely adds a candidate pair that the
-exact-Jaccard verify discards. Appends add files per batch; run
-``compact_store`` periodically to rewrite the store into
-``NEARDUP_STORE_BUCKETS`` band_key-clustered files. State grows with
-ACCEPTED (unique) docs only, the minimum any exact-verify near-dup gate
-can hold. The within-batch greedy pulls only verified pairs (not docs)
-to the driver, bounded by the bucket cap.
+The gate's state is a MinHash index (``operators/minhash_index.py``):
+the first batch commits the index manifest with the gate's banding
+parameters, every batch appends its survivors' bands, and the index
+helpers own the band layout, the parameter check, the tombstone
+anti-join and compaction. So the index verbs work on a gate store:
+``minhash_index_query`` probes it, ``minhash_index_delete`` takes
+accepted docs down, and ``minhash_index_compact`` (offline, between
+gate invocations) rewrites the per-batch append files. In stored-text
+mode the gate also keeps an append-only ``docs/`` directory of the
+accepted texts inside the store; the index never reads or sweeps it.
+
+Scale notes: step 2's candidate join BROADCASTS the arriving batch's
+band keys (micro-batch x bands rows of two longs — megabytes at any
+realistic trigger size), so the store side is scanned in place with NO
+shuffle at any store size (``test_neardup_store_join_no_store_exchange``).
+A catalog-registered bucketed table also avoids the store-side
+exchange, but pays seconds of metastore/commit overhead PER micro-batch
+append (measured 4.5-35 s per ``saveAsTable`` vs 0.2 s for a plain
+append); if micro-batches ever grow past broadcastable, it is the right
+alternative and ``partitioning.write_bucketed`` provides it. State
+grows with ACCEPTED (unique) docs only, the minimum any exact-verify
+near-dup gate can hold. The within-batch greedy pulls only verified
+pairs (not docs) to the driver, bounded by the bucket cap.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
-
-NEARDUP_STORE_BUCKETS = 32
-_LAYOUT = store.Layout("bands")
-
-from ..operators.dedup import (
-    BROADCAST_PAIR_LIMIT,
-    jaccard_shingle_udf,
-    minhash_band_hashes,
+from ..operators.dedup import BROADCAST_PAIR_LIMIT, jaccard_shingle_udf
+from ..operators.minhash_index import (
+    _append_capped,
+    _band_key_rows,
+    _live_bands,
+    _open_index,
 )
-
-
-def _store_paths(store_dir: str) -> tuple[str, str]:
-    """(bands dir, docs dir), resolved through the manifest: bands live
-    under a generation-suffixed name once ``compact_store`` has run
-    (generation 0 keeps the legacy plain ``bands`` name so existing
-    stores read unchanged). ``docs`` is append-only and never
-    compacted/renamed, so it needs no generation."""
-    gen = store.generation(store.read_manifest(store_dir))
-    return _LAYOUT.data_dir(store_dir, gen), os.path.join(store_dir, "docs")
-
-
-def _check_store_params(
-    store_dir: str, num_hashes: int, bands: int, shingle_n: int
-) -> None:
-    """Persist the banding parameters with the store and refuse to mix:
-    bands computed under different (num_hashes, bands, shingle_n) never
-    equi-join each other, so a parameter drift would silently admit
-    every cross-batch near-duplicate (same precedent as
-    ``similarity.lsh_write``'s meta.json)."""
-    params = {
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-    }
-    stored = store.read_manifest(store_dir)
-    if stored:
-        if {k: stored.get(k) for k in params} != params:
-            raise ValueError(
-                f"near-dup store at {store_dir} was built with {stored}; "
-                f"refusing to gate with {params} — matching would "
-                "silently fail"
-            )
-        band_path = _LAYOUT.data_dir(store_dir, store.generation(stored))
-        # v2 (bucketed-table) band files are plain parquet with the same
-        # (old_id, band_key) schema — readable as-is; only the pre-v2
-        # (band_id, band_hash) schema needs a rebuild
-        if (
-            stored.get("store_format")
-            not in ("bucketed_bands_v2", "plain_bands_v3")
-            and os.path.exists(band_path)
-        ):
-            raise ValueError(
-                f"near-dup store at {store_dir} uses the pre-v2 band "
-                "layout; rebuild it (re-run the gate over the accepted "
-                "docs into a fresh store_dir) before gating"
-            )
-        return
-    store.commit_manifest(
-        store_dir, {**params, "store_format": "plain_bands_v3"}, _LAYOUT
-    )
-
-
-def _band_keys(
-    docs: DataFrame,
-    out_id: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
-    """(out_id, band_key) rows for every doc band — ONE Arrow pass via
-    ``minhash_band_hashes``, band id folded into the single join key."""
-    return docs.select(
-        F.col("id").alias(out_id),
-        F.posexplode(
-            minhash_band_hashes("text", num_hashes, bands, shingle_n)
-        ).alias("band_id", "band_hash"),
-    ).select(
-        out_id, F.xxhash64("band_id", "band_hash").alias("band_key")
-    )
-
-
-def _append_bands(spark: SparkSession, store_dir: str, bands_df: DataFrame) -> None:
-    """Append band rows as plain parquet (``compact_store`` merges the
-    per-batch files periodically)."""
-    band_path, _ = _store_paths(store_dir)
-    bands_df.write.mode("append").parquet(band_path)
-
-
-def compact_store(spark: SparkSession, store_dir: str) -> None:
-    """Rewrite the band store into ``NEARDUP_STORE_BUCKETS``
-    band_key-clustered, key-sorted files (appends leave files per
-    micro-batch). Clustering + the within-file sort give every file a
-    tight band_key min/max, so future optimizations (or an engine with
-    file-level zone maps) can skip files; for the broadcast candidate
-    join the win is simply fewer, larger scan splits. Offline
-    maintenance: run between gate invocations, not concurrently with
-    one. Crash-safe on local filesystems (``dbqt_spark.store``; no
-    directory is ever renamed): the compacted bands land under the NEXT
-    generation's directory name, ``meta.json`` is committed LAST as the
-    commit point, and stale generations are swept afterwards. A crash
-    anywhere, the manifest commit included, leaves the manifest
-    pointing at a complete generation — the gate can never see an
-    absent store and silently re-admit near-duplicates; half-written
-    next-generation dirs are orphans the next compaction removes."""
-    meta = store.read_manifest(store_dir)
-    band_path = _LAYOUT.data_dir(store_dir, store.generation(meta))
-    if not os.path.exists(band_path):
-        return
-    new = store.compacted(meta)
-    (
-        spark.read.parquet(band_path)
-        .repartition(NEARDUP_STORE_BUCKETS, "band_key")
-        .sortWithinPartitions("band_key")
-        .write.mode("overwrite")
-        .parquet(_LAYOUT.data_dir(store_dir, new["generation"]))
-    )
-    store.commit_manifest(store_dir, new, _LAYOUT)
-
 
 # The verify kernel is SHARED with the batch operator
 # (``operators.dedup.jaccard_shingle_udf``) so the gate's verdicts, the
@@ -247,8 +139,10 @@ def minhash_gate_batch(
     from ..operators.dedup import _candidate_pair_plan, _cap_buckets
 
     spark = batch_df.sparkSession
-    _check_store_params(store_dir, num_hashes, bands, shingle_n)
-    band_path, doc_path = _store_paths(store_dir)
+    meta = _open_index(
+        store_dir, num_hashes, bands, shingle_n, max_bucket_size
+    )
+    doc_path = os.path.join(store_dir, "docs")
     external_texts = corpus is not None
     # NOT spread (measured, r16): fanning a single-partition micro-batch
     # out before the band hash (the r15 item-8 treatment) made the gate
@@ -266,7 +160,9 @@ def minhash_gate_batch(
     #    cap stays LAZY (in-plan broadcast anti-join) here — the gate
     #    needs no drop-stats job, and a streaming operator's per-batch
     #    latency is priced in sequential jobs, so it runs the minimum.
-    batch_bands = _band_keys(docs, "id", num_hashes, bands, shingle_n).persist()
+    batch_bands = _band_key_rows(
+        docs, "id", "text", "id", num_hashes, bands, shingle_n
+    ).persist()
     capped = batch_bands
     if max_bucket_size is not None:
         capped = _cap_buckets(batch_bands, ["band_key"], max_bucket_size)
@@ -306,11 +202,11 @@ def minhash_gate_batch(
     # die reading a missing docs dir (it skips the cross-store step —
     # the store holds only this batch's own rows, which the self-pair
     # exclusion discards anyway). Pointer mode needs only the bands.
-    has_store = os.path.exists(band_path) and (
+    store_bands = _live_bands(spark, store_dir, meta)
+    has_store = store_bands is not None and (
         external_texts or os.path.exists(doc_path)
     )
     if has_store:
-        store_bands = spark.read.parquet(band_path)
         store_docs = (
             corpus.select(
                 F.col(id_col).alias("id"), F.col(text_col).alias("text")
@@ -321,8 +217,8 @@ def minhash_gate_batch(
         cross_cand = (
             F.broadcast(capped.select(F.col("id").alias("qid"), "band_key"))
             .join(store_bands, "band_key")
-            .filter(F.col("qid") != F.col("old_id"))
-            .select("qid", F.col("old_id").alias("cid"))
+            .filter(F.col("qid") != F.col("corpus_id"))
+            .select("qid", F.col("corpus_id").alias("cid"))
             # no cross-band distinct (r16): duplicate pairs re-verify
             # idempotently and the store-match set dedupes; the saved
             # exchange is one stage-job per micro-batch. Duplicates
@@ -492,10 +388,10 @@ def minhash_gate_batch(
     from concurrent.futures import ThreadPoolExecutor
 
     def _do_bands() -> None:
-        _append_bands(
-            spark,
+        _append_capped(
             store_dir,
-            band_append.select(F.col("id").alias("old_id"), "band_key"),
+            meta,
+            band_append.select(F.col("id").alias("corpus_id"), "band_key"),
         )
 
     def _do_docs() -> None:

@@ -866,11 +866,12 @@ def test_torn_manifest_commit_keeps_previous_generation(
     import shutil
 
     from dbqt_spark.operators.minhash_index import (
+        minhash_index_compact,
         minhash_index_query,
         minhash_index_write,
     )
     from dbqt_spark.operators.similarity import lsh_delete
-    from dbqt_spark.streaming.neardup import compact_store, minhash_gate_batch
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     def torn_dump(obj, fp, *args, **kwargs):
         text = json.dumps(obj, *args, **kwargs)
@@ -962,8 +963,9 @@ def test_torn_manifest_commit_keeps_previous_generation(
         for r in minhash_gate_batch(arrivals, twin, threshold=0.5).collect()
     )
     assert want == [3]
-    crash(compact_store, spark, gate)
-    assert manifest(gate).get("generation", 0) == 0
+    gen = manifest(gate)["generation"]
+    crash(minhash_index_compact, spark, gate)
+    assert manifest(gate)["generation"] == gen
     got = sorted(
         r["id"]
         for r in minhash_gate_batch(arrivals, gate, threshold=0.5).collect()
@@ -1002,3 +1004,87 @@ def test_store_path_with_uri_scheme_is_refused(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not (tmp_path / "s3a:").exists()
     assert not (tmp_path / "hdfs:").exists()
+
+
+def test_gate_store_is_a_minhash_index(spark, tmp_path):
+    """The near-dup gate keeps its state in a MinHash index: after two
+    gate batches, ``minhash_index_query`` over the gate's store finds a
+    crawl's near-dup of an accepted doc, and ``minhash_index_delete``
+    takes an accepted doc down for the gate too (its near-dup is
+    admitted afterwards). A gate store whose first append never landed
+    probes as empty."""
+    from dbqt_spark.operators.minhash_index import (
+        _open_index,
+        minhash_index_delete,
+        minhash_index_query,
+    )
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    other = "completely different content about other things entirely " * 5
+    near = base.replace("kappa", "kappaX", 1)
+    crawl = spark.createDataFrame([(101, near)], ["doc_id", "text"])
+    gate = str(tmp_path / "gate")
+    b1 = spark.createDataFrame([(1, base), (2, other)], ["doc_id", "text"])
+    b2 = spark.createDataFrame(
+        [(3, "fresh independent words here now " * 5)], ["doc_id", "text"]
+    )
+    accepted = b1.unionByName(b2)
+    # the state a first gate batch leaves if it dies before its append
+    _open_index(gate, 32, 16, 3, 1000)
+    assert minhash_index_query(
+        crawl, gate, threshold=0.5, corpus=accepted
+    ).collect() == []
+
+    kept = [
+        r["id"]
+        for b in (b1, b2)
+        for r in minhash_gate_batch(b, gate, threshold=0.5).collect()
+    ]
+    assert sorted(kept) == [1, 2, 3]
+    hits = minhash_index_query(crawl, gate, threshold=0.5, corpus=accepted)
+    assert [(r["query_id"], r["corpus_id"]) for r in hits.collect()] == [
+        (101, 1)
+    ]
+
+    minhash_index_delete(spark, gate, [1])
+    assert minhash_index_query(
+        crawl, gate, threshold=0.5, corpus=accepted
+    ).collect() == []
+    kept = minhash_gate_batch(
+        spark.createDataFrame([(4, near)], ["doc_id", "text"]),
+        gate,
+        threshold=0.5,
+    ).collect()
+    assert [r["id"] for r in kept] == [4]
+
+
+def test_gate_refuses_pre_index_store_before_any_job(spark, tmp_path):
+    """A gate store in the layout that predates the MinHash index
+    (its own ``bands`` directory of ``old_id`` rows under a
+    ``plain_bands_v3`` manifest) is refused with a ValueError naming
+    the rebuild, before any Spark job runs — gating against it would
+    read a layout no code writes any more."""
+    import json
+
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
+
+    gate = tmp_path / "gate"
+    (gate / "bands").mkdir(parents=True)
+    (gate / "meta.json").write_text(json.dumps({
+        "num_hashes": 32, "bands": 16, "shingle_n": 3,
+        "store_format": "plain_bands_v3",
+    }))
+    docs = spark.createDataFrame([(1, "some text here")], ["doc_id", "text"])
+    sc = spark.sparkContext
+    sc.setJobGroup("pre-index-gate-refusal", "gate store format check")
+    try:
+        with pytest.raises(ValueError, match="re-run minhash_gate_batch"):
+            minhash_gate_batch(docs, str(gate))
+        assert (
+            sc.statusTracker().getJobIdsForGroup("pre-index-gate-refusal")
+            == []
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(os.listdir(gate)) == ["bands", "meta.json"]

@@ -292,12 +292,13 @@ def test_neardup_store_join_no_store_exchange(spark, tmp_path):
     store size, and the batch side ships as a broadcast."""
     import re
 
-    from dbqt_spark.plans import formatted_plan
-    from dbqt_spark.streaming.neardup import (
-        _band_keys,
-        _store_paths,
-        minhash_gate_batch,
+    from dbqt_spark.operators.minhash_index import (
+        _band_key_rows,
+        _live_bands,
+        _load_meta,
     )
+    from dbqt_spark.plans import formatted_plan
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     store = str(tmp_path / "store")
     b1 = spark.createDataFrame(
@@ -310,11 +311,8 @@ def test_neardup_store_join_no_store_exchange(spark, tmp_path):
     minhash_gate_batch(b1, store)
     minhash_gate_batch(b2, store)  # second append -> multi-file store
 
-    band_path, _ = _store_paths(store)
-    new_bands = _band_keys(
-        b2.select(F.col("doc_id").alias("id"), "text"), "new_id", 32, 16, 3
-    )
-    store_bands = spark.read.parquet(band_path)
+    new_bands = _band_key_rows(b2, "new_id", "text", "doc_id", 32, 16, 3)
+    store_bands = _live_bands(spark, store, _load_meta(store))
     plan = formatted_plan(
         F.broadcast(new_bands).join(store_bands, "band_key")
     )
@@ -336,8 +334,8 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
     import re
 
     from dbqt_spark.operators.dedup import _candidate_pair_plan
+    from dbqt_spark.operators.minhash_index import _band_key_rows
     from dbqt_spark.plans import formatted_plan
-    from dbqt_spark.streaming.neardup import _band_keys
 
     docs = spark.createDataFrame(
         [(i, f"some text body {i % 3} " * 10) for i in range(8)],
@@ -346,7 +344,7 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
     # no bucket cap here: the cap's own size-accounting aggregate lives
     # in a broadcast subtree and is orthogonal to the pair-join shape
     # under test
-    capped = _band_keys(docs, "id", 32, 16, 3)
+    capped = _band_key_rows(docs, "id", "text", "id", 32, 16, 3)
     within = _candidate_pair_plan(
         capped,
         ["band_key"],
@@ -376,21 +374,25 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
 
 
 def test_neardup_store_compaction_roundtrip(spark, tmp_path):
-    """compact_store rewrites the per-batch append files into at most
-    NEARDUP_STORE_BUCKETS band_key-clustered files, and the gate keeps
-    working against the compacted store (cross-batch near-dups still
-    dropped)."""
+    """minhash_index_compact rewrites a gate store's per-batch append
+    files into at most MINHASH_INDEX_BUCKETS band_key-clustered files,
+    and the gate keeps working against the compacted store (cross-batch
+    near-dups still dropped)."""
     import glob
 
-    from dbqt_spark.streaming.neardup import (
-        NEARDUP_STORE_BUCKETS,
-        _store_paths,
-        compact_store,
-        minhash_gate_batch,
+    from dbqt_spark.operators.minhash_index import (
+        MINHASH_INDEX_BUCKETS,
+        _bands_dir,
+        _load_meta,
+        minhash_index_compact,
     )
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     def band_files(band_path):
         return glob.glob(os.path.join(band_path, "part-*"))
+
+    def live_band_path(store):
+        return _bands_dir(store, _load_meta(store)["generation"])
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     words = "red green blue cyan magenta yellow black white grey pink".split()
@@ -412,19 +414,19 @@ def test_neardup_store_compaction_roundtrip(spark, tmp_path):
         store,
         threshold=0.5,
     )
-    band_path, _ = _store_paths(store)
+    band_path = live_band_path(store)
     assert band_files(band_path)
     rows_before = spark.read.parquet(band_path).count()
-    compact_store(spark, store)
+    minhash_index_compact(spark, store)
     # compaction commits a NEW generation through the manifest —
     # re-resolve, and the pre-compaction dir must be swept
-    new_band_path, _ = _store_paths(store)
+    new_band_path = live_band_path(store)
     assert new_band_path != band_path and not os.path.exists(band_path)
     band_path = new_band_path
     after = band_files(band_path)
     # bounded file count regardless of how many batches appended, and
     # nothing lost in the rewrite
-    assert 0 < len(after) <= NEARDUP_STORE_BUCKETS
+    assert 0 < len(after) <= MINHASH_INDEX_BUCKETS
     assert spark.read.parquet(band_path).count() == rows_before
     # gate still works: near-dup of doc 1 is dropped, fresh doc kept
     kept = sorted(
@@ -557,11 +559,12 @@ def test_neardup_store_compaction_crash_recovery(spark, tmp_path):
     the gate keeps working against the committed store (never silently
     gates against an absent one), and the next compaction sweeps the
     orphan."""
-    from dbqt_spark.streaming.neardup import (
-        _store_paths,
-        compact_store,
-        minhash_gate_batch,
+    from dbqt_spark.operators.minhash_index import (
+        _bands_dir,
+        _load_meta,
+        minhash_index_compact,
     )
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     store = str(tmp_path / "store")
@@ -570,9 +573,9 @@ def test_neardup_store_compaction_crash_recovery(spark, tmp_path):
         store,
         threshold=0.5,
     )
-    band_path, _ = _store_paths(store)
+    gen = _load_meta(store)["generation"]
     # simulate the crash window: orphan next-gen dir, manifest unchanged
-    os.makedirs(os.path.join(store, "bands-1"))
+    os.makedirs(os.path.join(store, f"bands-{gen + 1}"))
 
     kept = sorted(
         r["id"]
@@ -590,8 +593,8 @@ def test_neardup_store_compaction_crash_recovery(spark, tmp_path):
 
     # the next compaction commits a real new generation and sweeps both
     # the orphan and the old dir
-    compact_store(spark, store)
-    new_band_path, _ = _store_paths(store)
+    minhash_index_compact(spark, store)
+    new_band_path = _bands_dir(store, _load_meta(store)["generation"])
     assert os.path.exists(new_band_path)
     leftover = {
         d for d in os.listdir(store)
