@@ -48,7 +48,7 @@ def connected_components(
     graph).
 
     Hybrid execution (the same localize contract as
-    ``dedup._eager_pairs_from_banded``): when the pair set fits under
+    ``dedup._cap_then_localize``): when the pair set fits under
     ``localize_limit`` (default ``dedup.BROADCAST_PAIR_LIMIT``) the
     components are resolved driver-side with union-find — O(pairs
     alpha) instant, no per-round jobs — because a near-dup pair set is

@@ -313,69 +313,44 @@ def minhash_band_hashes(
     return bandhashes(F.col(text_col))
 
 
-def _split_oversized(
-    banded: DataFrame, keys: list[str], max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """(capped_rows, oversized_buckets): rows whose LSH bucket has at most
-    ``max_bucket_size`` members, plus one row per DROPPED bucket with its
-    member count (``__n``) for drop accounting.
-
-    A hot bucket (boilerplate/empty docs whose band chunks all collide) makes
-    the pair-generating self-join quadratic — the classic LSH blowup at
-    corpus scale. Capping is the standard guard: members of an over-full
-    bucket are so densely similar that exact dedup (or a cheaper fingerprint
-    pass) should own them; near-dup banding is for the sparse tail. The
-    aggregated size table has one row per OVERSIZED bucket only, so the
-    filter is a broadcast anti-join (no extra shuffle of the banded rows
-    beyond the groupBy partials). Callers should persist ``banded`` first:
-    the size aggregate AND the anti-join probe AND the downstream self-join
-    all consume it.
-    """
-    oversized = (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-    )
-    capped = banded.join(
-        F.broadcast(oversized.select(*keys)), keys, "left_anti"
-    )
-    return capped, oversized
-
-
-def _cap_buckets(banded: DataFrame, keys: list[str], max_bucket_size: int) -> DataFrame:
-    """Drop rows in oversized LSH buckets (see ``_split_oversized``)."""
-    return _split_oversized(banded, keys, max_bucket_size)[0]
-
-
 # Oversized-bucket key sets up to this many rows are COLLECTED (keys only —
 # a handful of ints per row) so drop accounting costs zero extra jobs and
-# the downstream pair plan anti-joins a LocalRelation instead of embedding
-# a second aggregate of the banded frame. The bound is generous: oversized
+# the downstream plan anti-joins a LocalRelation instead of embedding a
+# second aggregate of the banded frame. The bound is generous: oversized
 # buckets number at most n_banded_rows / max_bucket_size, so hitting it
 # means >10M rows sit in hot buckets — the pathological corpus the
 # cluster-side fallback exists for.
 MAX_LOCAL_OVERSIZED = 10_000
 
 
-def _cap_buckets_eager(
+def _cap_buckets(
     banded: DataFrame,
     keys: list[str],
     max_bucket_size: int,
-    drop_stats: dict | None,
+    drop_stats: dict | None = None,
 ) -> DataFrame:
-    """Capped banded frame with drop accounting folded into the SAME job.
+    """``banded`` without the rows whose bucket (``keys``) holds more than
+    ``max_bucket_size`` members — the engine's one LSH skew guard.
 
-    One bounded probe (``limit(MAX_LOCAL_OVERSIZED + 1).collect()`` over
-    the oversized-bucket aggregate of the caller-persisted ``banded``)
-    yields both the drop stats AND the oversized key list, so the r6
-    shape — the pair-probe job computing the aggregate inside its
-    broadcast subtree, then ``_record_drop_stats`` re-running the same
-    aggregate as a second job — collapses to one small job whose output
-    the pair plan consumes as a LocalRelation (VERDICT r6 ask #6). The
-    common corpus has ZERO oversized buckets, in which case the pair plan
-    carries no anti-join at all. Only a corpus with >MAX_LOCAL_OVERSIZED
-    hot buckets falls back to the cluster-side broadcast anti-join plus a
-    separate stats job (the r6 behavior, pathological inputs only)."""
+    A hot bucket (boilerplate/empty docs whose band chunks all collide)
+    makes the pair-generating self-join quadratic — the classic LSH
+    blowup at corpus scale. Capping is the standard guard: members of an
+    over-full bucket are so densely similar that exact dedup (or a
+    cheaper fingerprint pass) should own them; near-dup banding is for
+    the sparse tail. Silently skipping the densest clusters is a
+    correctness trap, so ``drop_stats`` (when given) receives
+    n_dropped_buckets / n_dropped_rows.
+
+    EAGER: one bounded probe (``limit(MAX_LOCAL_OVERSIZED + 1).collect()``
+    over the oversized-bucket aggregate) yields both the drop stats and
+    the oversized key list. With zero oversized buckets — the common
+    corpus — ``banded`` comes back unchanged (no anti-join in the
+    consuming plan); otherwise the keys come back as a broadcast
+    LocalRelation to anti-join. Only a corpus with more than
+    ``MAX_LOCAL_OVERSIZED`` hot buckets keeps the aggregate cluster-side
+    (broadcast anti-join, plus one stats job when ``drop_stats`` is
+    requested). Callers persist ``banded`` first: the probe materializes
+    it, and the consuming plan reads it again."""
     sizes = (
         banded.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -383,11 +358,13 @@ def _cap_buckets_eager(
     )
     over_rows = sizes.limit(MAX_LOCAL_OVERSIZED + 1).collect()
     if len(over_rows) > MAX_LOCAL_OVERSIZED:
-        capped = banded.join(
-            F.broadcast(sizes.select(*keys)), keys, "left_anti"
-        )
-        _record_drop_stats(sizes, drop_stats)
-        return capped
+        if drop_stats is not None:
+            row = sizes.agg(
+                F.count(F.lit(1)).alias("b"), F.sum("__n").alias("r")
+            ).collect()[0]
+            drop_stats["n_dropped_buckets"] = int(row["b"])
+            drop_stats["n_dropped_rows"] = int(row["r"])
+        return banded.join(F.broadcast(sizes.select(*keys)), keys, "left_anti")
     if drop_stats is not None:
         drop_stats["n_dropped_buckets"] = len(over_rows)
         drop_stats["n_dropped_rows"] = int(sum(r["__n"] for r in over_rows))
@@ -398,22 +375,6 @@ def _cap_buckets_eager(
         schema=banded.select(*keys).schema,
     )
     return banded.join(F.broadcast(over_local), keys, "left_anti")
-
-
-def _record_drop_stats(oversized: DataFrame, drop_stats: dict | None) -> None:
-    """Eagerly fill ``drop_stats`` with n_dropped_buckets / n_dropped_rows.
-
-    Silently skipping the densest clusters is a correctness trap in a
-    production dedup — the counts make it observable. Runs one small job
-    (cheap: the banded frame is persisted by the callers)."""
-    if drop_stats is None:
-        return
-    row = oversized.agg(
-        F.count(F.lit(1)).alias("b"),
-        F.coalesce(F.sum("__n"), F.lit(0)).alias("r"),
-    ).collect()[0]
-    drop_stats["n_dropped_buckets"] = int(row["b"])
-    drop_stats["n_dropped_rows"] = int(row["r"])
 
 
 def minhash_candidate_pairs(
@@ -428,17 +389,16 @@ def minhash_candidate_pairs(
 
     Shuffle profile: one explode (narrow) + one shuffle on band_hash. Skew
     guard: buckets larger than ``max_bucket_size`` ids would blow up the
-    self-join quadratically, so they are dropped (``_split_oversized``)
+    self-join quadratically, so they are dropped (``_cap_buckets``)
     before pairing; pass ``None`` to disable, pass a ``drop_stats`` dict to
     receive n_dropped_buckets / n_dropped_rows (computed eagerly).
 
     The banded frame is persisted for the duration of the (eager) pair
-    materialization — the size aggregate, the anti-join probe, and both
-    self-join sides consume it; unpersisted, the signature pipeline would
-    re-run up to 4x — then released. The returned pair frame is small
-    (bucket-capped): a LocalRelation when it fits the broadcast limit
-    (no cached blocks survive), else persisted — see
-    ``_eager_pairs_from_banded``.
+    materialization — the cap probe and both self-join sides consume it;
+    unpersisted, the signature pipeline would re-run per consumer — then
+    released. The returned pair frame is small (bucket-capped): a
+    LocalRelation when it fits the broadcast limit (no cached blocks
+    survive), else persisted — see ``_cap_then_localize``.
     """
     banded = sigs.select(
         "id",
@@ -461,15 +421,13 @@ def minhash_candidate_pairs(
             )
         ).alias("band_id", "band_hash"),
     )
-    pairs, _ = _eager_pairs_from_banded(
+    keys = ["band_id", "band_hash"]
+    pairs, _ = _cap_then_localize(
         banded,
-        ["band_id", "band_hash"],
-        lambda a, b: [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        ],
+        keys,
         max_bucket_size,
         drop_stats,
+        lambda capped: _candidate_pair_plan(capped, keys, _id_pair),
     )
     return pairs
 
@@ -485,7 +443,7 @@ def _candidate_pair_plan(
     """The LAZY candidate-pair plan: equi-self-join on the bucket keys
     (never a cartesian product), pair columns, cross-band distinct.
     Split out so plan tests can assert the join shape that
-    ``_eager_pairs_from_banded`` executes.
+    ``_cap_then_localize`` executes.
 
     ``broadcast_self=True`` broadcasts one side of the self-join —
     ONLY valid when the caller can bound the banded frame (the
@@ -515,59 +473,53 @@ def _candidate_pair_plan(
     return out.distinct() if distinct_pairs else out
 
 
-def _eager_pairs_from_banded(
+def _id_pair(a: DataFrame, b: DataFrame) -> list:
+    """``select_pair`` of the plain (id_a, id_b) candidate plans."""
+    return [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+
+
+def _cap_then_localize(
     banded: DataFrame,
     keys: list[str],
-    select_pair,
     max_bucket_size: int | None,
     drop_stats: dict | None,
-    pair_filter: "F.Column | None" = None,
+    build,
+    localize: bool = True,
 ) -> tuple[DataFrame, int]:
-    """Candidate pairs from a (id, *keys) banded frame: cap hot buckets,
-    self-join on the bucket keys, dedup across bands — MATERIALIZED
-    eagerly so the big banded frame can be released before returning.
-    Returns (pairs, n_pairs).
+    """``build(capped_banded)`` MATERIALIZED eagerly, with hot buckets
+    (``keys``) capped by ``_cap_buckets`` first, so the banded frame can
+    be released before returning. Returns (result, n_rows).
 
-    The eager materialization is deliberate: the banded frame feeds the
-    size aggregate, the anti-join probe, and both self-join sides; holding
-    it cached across the caller's (arbitrarily late) terminal action leaks
-    O(n_docs x bands) cached blocks per invocation.
+    The banded frame feeds the cap probe and the built plan (both sides
+    of a self-join), so it is persisted for the duration; holding it
+    cached across the caller's (arbitrarily late) terminal action would
+    leak O(n_docs x bands) cached blocks per invocation. The result is
+    persisted BEFORE its probe, so the over-limit fallback's count()
+    finishes from cache instead of re-executing the plan.
 
-    Pair sets up to ``BROADCAST_PAIR_LIMIT`` (ids only — 16 bytes/row,
-    <2 MB at the limit) are COLLECTED and rebuilt as a LocalRelation:
-    zero cached blocks survive the call, downstream joins broadcast the
-    local frame without an extra exchange job, and the whole candidate
-    phase is ONE Spark job (the r5 bench's minhash tail was the
-    sequential persist -> count -> verify-count job chain queueing behind
-    12 concurrent queries). Bigger candidate sets (pathological corpora)
-    fall back to a persisted cluster-side frame — callers release that
-    one with ``.unpersist()`` / ``operators.cache.released``.
-    ``select_pair(a, b)`` builds the output columns from the two aliased
-    join sides."""
+    With ``localize`` (right for results bounded small by construction:
+    candidate or thresholded pairs), a result within
+    ``BROADCAST_PAIR_LIMIT`` rows is COLLECTED and rebuilt as a
+    LocalRelation: zero cached blocks survive the call and downstream
+    joins broadcast the local frame without an extra exchange job. A
+    bigger result, or any result with ``localize=False`` (corpus-sized
+    outputs), comes back persisted — callers release it with
+    ``.unpersist()`` / ``operators.cache.released``."""
     banded = banded.persist()
     capped = banded
     if max_bucket_size is not None:
-        # fills drop_stats in the same bounded probe job (r6 ran the
-        # bucket-size aggregate twice: once inside the pair job's
-        # broadcast subtree, once as a standalone stats job)
-        capped = _cap_buckets_eager(banded, keys, max_bucket_size, drop_stats)
-    pairs_plan = _candidate_pair_plan(capped, keys, select_pair, pair_filter)
-    # persist BEFORE the probe: partitions the limit computes are cached,
-    # so the over-limit fallback's count() finishes the remainder instead
-    # of re-executing the whole self-join (ADVICE r6 — the double cost
-    # landed exactly on the pathological huge-candidate-set path)
-    pairs = pairs_plan.persist()
-    rows = pairs.limit(BROADCAST_PAIR_LIMIT + 1).collect()
-    if len(rows) > BROADCAST_PAIR_LIMIT:
-        # huge candidate set: stay cluster-side (persisted), don't pull
-        # it through the driver
-        n_pairs = pairs.count()
-        banded.unpersist()
-        return pairs, n_pairs
-    pairs.unpersist()
+        capped = _cap_buckets(banded, keys, max_bucket_size, drop_stats)
+    result = build(capped).persist()
+    if localize:
+        rows = result.limit(BROADCAST_PAIR_LIMIT + 1).collect()
+        if len(rows) <= BROADCAST_PAIR_LIMIT:
+            schema = result.schema
+            result.unpersist()
+            banded.unpersist()
+            return banded.sparkSession.createDataFrame(rows, schema), len(rows)
+    n_rows = result.count()
     banded.unpersist()
-    local = banded.sparkSession.createDataFrame(rows, schema=pairs_plan.schema)
-    return local, len(rows)
+    return result, n_rows
 
 
 # Above this many candidate pairs the verify-side broadcasts fall back to
@@ -610,7 +562,7 @@ def minhash_near_duplicates(
 
     The candidate phase runs eagerly (one job; drop stats on request);
     no intermediate cache outlives the call. On the common path the
-    candidate set localizes (``_eager_pairs_from_banded``) and the
+    candidate set localizes (``_cap_then_localize``) and the
     returned verification frame is LAZY with zero cached blocks; only
     when the candidate set exceeds ``BROADCAST_PAIR_LIMIT`` does the
     result come back persisted — release that with ``.unpersist()`` or
@@ -621,15 +573,13 @@ def minhash_near_duplicates(
             minhash_band_hashes(text_col, num_hashes, bands, shingle_n)
         ).alias("band_id", "band_hash"),
     )
-    pairs, n_pairs = _eager_pairs_from_banded(
+    keys = ["band_id", "band_hash"]
+    pairs, n_pairs = _cap_then_localize(
         banded,
-        ["band_id", "band_hash"],
-        lambda a, b: [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        ],
+        keys,
         max_bucket_size,
         drop_stats,
+        lambda capped: _candidate_pair_plan(capped, keys, _id_pair),
     )
 
     # Exact-Jaccard verification via the shared stage (see
@@ -856,17 +806,18 @@ def simhash_near_duplicates(
     hamming = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     )
-    pairs, _ = _eager_pairs_from_banded(
+    keys = ["band", "chunk"]
+    pairs, _ = _cap_then_localize(
         banded,
-        ["band", "chunk"],
-        lambda a, b: [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        ],
+        keys,
         max_bucket_size,
         drop_stats,
-        pair_filter=hamming <= max_hamming,
+        lambda capped: _candidate_pair_plan(
+            capped,
+            keys,
+            lambda a, b: [*_id_pair(a, b), hamming.alias("hamming")],
+            pair_filter=hamming <= max_hamming,
+        ),
     )
     return pairs
 
@@ -935,67 +886,54 @@ def ngram_jaccard_near_duplicates(
         .select("id", "shingle")
         .distinct()
     )
-    sh = sh.persist()
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
+
+    def build(sh_kept: DataFrame) -> DataFrame:
+        # set sizes AFTER the df-cap so the Jaccard denominator matches
+        # the (possibly reduced) similarity domain
+        sizes = sh_kept.groupBy("id").agg(F.count(F.lit(1)).alias("__sz"))
+        a, b = sh_kept.alias("a"), sh_kept.alias("b")
+        shared = (
+            a.join(
+                b,
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("__shared"))
         )
-        if drop_stats is not None:
-            row = hot.agg(
-                F.count(F.lit(1)).alias("s"),
-                F.coalesce(F.sum("__df"), F.lit(0)).alias("p"),
-            ).collect()[0]
-            drop_stats["n_dropped_shingles"] = int(row["s"])
-            drop_stats["n_dropped_postings"] = int(row["p"])
-        sh_kept = sh.join(
-            F.broadcast(hot.select("shingle")), "shingle", "left_anti"
+        jac = F.col("__shared") / (
+            F.col("__sa") + F.col("__sb") - F.col("__shared")
         )
-    else:
-        sh_kept = sh
-    # set sizes AFTER the df-cap so the Jaccard denominator matches the
-    # (possibly reduced) similarity domain
-    sizes = sh_kept.groupBy("id").agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = sh_kept.alias("a"), sh_kept.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
+        return (
+            shared.join(
+                sizes.select(
+                    F.col("id").alias("id_a"), F.col("__sz").alias("__sa")
+                ),
+                "id_a",
+            )
+            .join(
+                sizes.select(
+                    F.col("id").alias("id_b"), F.col("__sz").alias("__sb")
+                ),
+                "id_b",
+            )
+            # threshold on the UNROUNDED ratio (one IEEE division of two
+            # exact ints — engines agree bit-for-bit); round only for
+            # display
+            .filter(jac >= threshold)
+            .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__shared"))
+
+    # the df-cap is the bucket cap keyed on the shingle: a hot shingle's
+    # postings are a hot bucket's rows
+    stats = None if drop_stats is None else {}
+    pairs, _ = _cap_then_localize(
+        sh, ["shingle"], max_shingle_df, stats, build
     )
-    jac = F.col("__shared") / (
-        F.col("__sa") + F.col("__sb") - F.col("__shared")
-    )
-    pairs_plan = (
-        shared.join(
-            sizes.select(
-                F.col("id").alias("id_a"), F.col("__sz").alias("__sa")
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.select(
-                F.col("id").alias("id_b"), F.col("__sz").alias("__sb")
-            ),
-            "id_b",
-        )
-        # threshold on the UNROUNDED ratio (one IEEE division of two exact
-        # ints — engines agree bit-for-bit); round only for display
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
-    rows = pairs_plan.limit(BROADCAST_PAIR_LIMIT + 1).collect()
-    if len(rows) > BROADCAST_PAIR_LIMIT:
-        pairs = pairs_plan.persist()
-        pairs.count()
-        sh.unpersist()
-        return pairs
-    sh.unpersist()
-    return sh.sparkSession.createDataFrame(rows, schema=pairs_plan.schema)
+    if stats:
+        drop_stats["n_dropped_shingles"] = stats["n_dropped_buckets"]
+        drop_stats["n_dropped_postings"] = stats["n_dropped_rows"]
+    return pairs
 
 
 def minhash_cross_near_duplicates(
@@ -1041,7 +979,7 @@ def minhash_cross_near_duplicates(
             stats: dict = {}
             frame = frame.persist()
             to_release.append(frame)
-            frame = _cap_buckets_eager(
+            frame = _cap_buckets(
                 frame, ["band_id", "band_hash"], max_bucket_size, stats
             )
             if drop_stats is not None:
@@ -1168,15 +1106,12 @@ def edit_distance_near_duplicates(
             _deletion_neighborhood_expr(text_col, max_distance)
         ).alias("__v"),
     ).select("id", F.xxhash64("__v").alias("__vh"))
-    pairs, n_pairs = _eager_pairs_from_banded(
+    pairs, n_pairs = _cap_then_localize(
         banded,
         ["__vh"],
-        lambda a, b: [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        ],
         max_bucket_size,
         drop_stats,
+        lambda capped: _candidate_pair_plan(capped, ["__vh"], _id_pair),
     )
     docs = eligible.select(
         F.col(id_col).alias("__id"),

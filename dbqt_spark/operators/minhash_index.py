@@ -79,7 +79,6 @@ from .. import store
 from .dedup import (
     _attach_texts_and_verify,
     _cap_buckets,
-    _cap_buckets_eager,
     _spread,
     minhash_band_hashes,
 )
@@ -207,20 +206,6 @@ def _append_capped(path: str, meta: dict, rows: DataFrame) -> None:
     )
 
 
-def _capped(
-    banded: DataFrame, cap: int, drop_stats: dict | None
-) -> DataFrame:
-    """``banded`` (caller-persisted) without its oversized buckets.
-    Drop accounting requested -> eager cap (separate probe job, stats +
-    LocalRelation anti-join). Otherwise the cap stays LAZY: its size
-    aggregate rides the consuming job as a broadcast subtree over the
-    persisted bands — no separate probe job (r16; the eager probe cost
-    a 4-job executeTake ramp per lifecycle step)."""
-    if drop_stats is not None:
-        return _cap_buckets_eager(banded, ["band_key"], cap, drop_stats)
-    return _cap_buckets(banded, ["band_key"], cap)
-
-
 def _write_capped(
     banded: DataFrame,
     band_path: str,
@@ -232,7 +217,9 @@ def _write_capped(
         banded.write.mode(mode).parquet(band_path)
         return
     banded = banded.persist()
-    _capped(banded, cap, drop_stats).write.mode(mode).parquet(band_path)
+    _cap_buckets(banded, ["band_key"], cap, drop_stats).write.mode(
+        mode
+    ).parquet(band_path)
     banded.unpersist()
 
 
@@ -324,7 +311,14 @@ def minhash_index_delete(spark: SparkSession, path: str, ids) -> None:
     ``minhash_index_compact`` physically drops their band rows (and the
     tombstones with them). ``ids`` is a DataFrame (first column) or an
     iterable of id values. Commit protocol and semantics:
-    ``store.delete``."""
+    ``store.delete``.
+
+    On a near-dup gate store in stored-text mode the deleted doc's TEXT
+    stays in the gate's ``docs/`` directory: the tombstone hides its
+    bands, compaction drops the bands only, and nothing rewrites
+    ``docs/``. A takedown that must remove the text from disk needs a
+    pointer-mode gate (``corpus=`` / ``store_texts=False``), which
+    stores no text."""
     store.delete(spark, path, _load_meta(path), _LAYOUT, ids)
 
 
@@ -416,7 +410,9 @@ def minhash_index_query(
     if max_bucket_size is not None:
         q_bands = q_bands.persist()
         stats = None if drop_stats is None else {}
-        q_capped = _capped(q_bands, max_bucket_size, stats)
+        q_capped = _cap_buckets(
+            q_bands, ["band_key"], max_bucket_size, stats
+        )
         if drop_stats is not None:
             drop_stats["query"] = stats
             # stored-side drops happened at write/append time; surface

@@ -497,7 +497,7 @@ def _fp_band_pairs(
     every perceptual tier (image pHash/dHash, acoustic fingerprints):
     validation, band split, exact JVM ``bit_count(xor)`` verify,
     capped buckets with the drop-accounting contract."""
-    from .dedup import _eager_pairs_from_banded
+    from .dedup import _candidate_pair_plan, _cap_then_localize, _id_pair
 
     if max_hamming >= bands:
         raise ValueError(
@@ -525,17 +525,20 @@ def _fp_band_pairs(
     hamming = F.bit_count(
         F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}"))
     )
-    pairs, _ = _eager_pairs_from_banded(
+    keys = ["band", "chunk"]
+    pairs, _ = _cap_then_localize(
         banded,
-        ["band", "chunk"],
-        lambda a, b: [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        ],
+        keys,
         max_bucket_size,
         drop_stats,
-        pair_filter=hamming <= max_hamming,
+        lambda capped: _candidate_pair_plan(
+            capped,
+            keys,
+            lambda a, b: [
+                *_id_pair(a, b), hamming.cast("int").alias("hamming")
+            ],
+            pair_filter=hamming <= max_hamming,
+        ),
     )
     return pairs
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
+from .dedup import _cap_then_localize
 
 # LSH and IVF indexes share one layout: ``vectors``/``vectors-<N>``
 # data dirs and (IVF only) ``centroids.json``/``centroids-<N>.json``
@@ -893,58 +894,6 @@ def _resolve_bits(df: DataFrame, bits_per_band: int | None) -> int:
     return auto_bits_per_band(df.count())
 
 
-def _eager_capped_result(
-    banded: DataFrame,
-    keys: list[str],
-    max_block_size: int | None,
-    drop_stats: dict | None,
-    build_result,
-    localize_limit: int | None = None,
-) -> DataFrame:
-    """Run ``build_result(capped_banded)`` with the oversized-block guard.
-
-    Without ``max_block_size`` this is a pass-through (fully lazy, no
-    persist). With it, the banded frame feeds THREE consumers — the
-    block-size aggregate, the anti-join probe, and the main matmul — so
-    it is persisted for the duration and the result is materialized
-    EAGERLY before the banded blocks are released; unpersisted, the
-    banding ``pandas_udf`` pipeline would re-run ~3x per query (VERDICT
-    r5 #2: embedding_near_dups 3.4 -> 5.6 s). Drop counts land in
-    ``drop_stats`` (n_dropped_buckets / n_dropped_rows) when the caller
-    passes a dict.
-
-    With ``localize_limit`` (right for results bounded small by
-    construction, e.g. thresholded near-dup pairs) a result within the
-    limit is COLLECTED and rebuilt as a LocalRelation — zero cached
-    blocks survive the call (same shape as
-    ``dedup._eager_pairs_from_banded``). Otherwise — corpus-sized results
-    (``embedding_blocked_nn``) or an over-limit pair set — the RETURNED
-    frame is persisted and the caller releases it with ``.unpersist()``
-    (or ``operators.cache.released``)."""
-    from .dedup import _cap_buckets_eager
-
-    if max_block_size is None:
-        return build_result(banded)
-    banded = banded.persist()
-    # drop accounting rides the capping probe job (dedup's r6 ask #6
-    # restructure); the result plan anti-joins a LocalRelation of
-    # oversized keys — or nothing at all on the common zero-drop corpus
-    capped = _cap_buckets_eager(banded, keys, max_block_size, drop_stats)
-    # persist BEFORE the probe so the over-limit fallback's count()
-    # finishes from cache instead of re-executing the matmul (ADVICE r6)
-    result = build_result(capped).persist()
-    if localize_limit is not None:
-        rows = result.limit(localize_limit + 1).collect()
-        if len(rows) <= localize_limit:
-            schema = result.schema
-            result.unpersist()
-            banded.unpersist()
-            return banded.sparkSession.createDataFrame(rows, schema=schema)
-    result.count()
-    banded.unpersist()
-    return result
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float,
@@ -982,7 +931,7 @@ def embedding_near_dup_pairs(
     With the cap enabled the result is materialized EAGERLY: pair sets
     within the broadcast limit come back as a LocalRelation (zero cached
     blocks survive), bigger ones persisted (release with ``.unpersist()``
-    / ``operators.cache.released`` — see ``_eager_capped_result``);
+    / ``operators.cache.released`` — see ``dedup._cap_then_localize``);
     without the cap the plan stays fully lazy. ``bits_per_band=None``
     auto-derives the bucket width from the corpus size
     (``auto_bits_per_band``).
@@ -1033,16 +982,13 @@ def embedding_near_dup_pairs(
         # distinct() dedupes across bands
         return pairs.distinct()
 
-    from .dedup import BROADCAST_PAIR_LIMIT
-
-    return _eager_capped_result(
-        banded,
-        [*key_cols, "__band", "__bval"],
-        max_block_size,
-        drop_stats,
+    if max_block_size is None:
+        return build(banded)
+    pairs, _ = _cap_then_localize(
+        banded, [*key_cols, "__band", "__bval"], max_block_size, drop_stats,
         build,
-        localize_limit=BROADCAST_PAIR_LIMIT,
     )
+    return pairs
 
 
 def embedding_blocked_nn(
@@ -1069,7 +1015,7 @@ def embedding_blocked_nn(
     ``max_block_size`` / ``drop_stats`` are the same quadratic guard as
     ``embedding_near_dup_pairs`` — with the cap enabled the result is
     eagerly materialized and returned persisted (see
-    ``_eager_capped_result``); members of a dropped block can still
+    ``dedup._cap_then_localize``); members of a dropped block can still
     find their NN through their other ``bands - 1`` buckets; a vector
     dropped from ALL its blocks yields no NN row — the drop counts make
     that observable. ``bits_per_band=None`` auto-derives the bucket
@@ -1117,9 +1063,13 @@ def embedding_blocked_nn(
             .drop("__rn")
         )
 
-    return _eager_capped_result(
-        banded, [*key_cols, "__band", "__bval"], max_block_size, drop_stats, build
+    if max_block_size is None:
+        return build(banded)
+    nn, _ = _cap_then_localize(
+        banded, [*key_cols, "__band", "__bval"], max_block_size, drop_stats,
+        build, localize=False,
     )
+    return nn
 
 
 def cosine_pairs_exact(

@@ -53,13 +53,14 @@ def get_spark(
         # (bench.py, multi-tool CLIs, notebook users) share the session
         .config("spark.scheduler.mode", "FAIR")
         # The engine's hybrid operators gate on bounded limit-probes
-        # (`limit(N + 1).collect()`: connected_components, the neardup
-        # gate, bucket-cap accounting). executeTake's default ramp
+        # (`limit(N + 1).collect()`: the bucket cap `dedup._cap_buckets`,
+        # `dedup._cap_then_localize`, connected_components, the neardup
+        # gate's greedy). executeTake's default ramp
         # (initialNumPartitions=1, x4 per step) turns each probe into
         # 3-4 SEQUENTIAL jobs whenever the result is under the limit —
         # which for these probes is the expected case, so the ramp
         # never saves work and always costs job round-trips (r16,
-        # measured: _cap_buckets_eager 4 jobs -> 1). Sized to the
+        # measured: the bucket-cap probe 4 jobs -> 1). Sized to the
         # shuffle-partition count (scale-adaptive, not a local
         # constant): probe stages are post-AQE aggregates with at most
         # that many partitions, so the first pass covers them all.

@@ -33,6 +33,9 @@ accepted docs down, and ``minhash_index_compact`` (offline, between
 gate invocations) rewrites the per-batch append files. In stored-text
 mode the gate also keeps an append-only ``docs/`` directory of the
 accepted texts inside the store; the index never reads or sweeps it.
+So a takedown on a stored-text store hides the doc's bands but leaves
+its text in ``docs/`` (compaction drops bands only); pointer mode
+(``corpus=``) stores no text.
 
 Scale notes: step 2's candidate join BROADCASTS the arriving batch's
 band keys (micro-batch x bands rows of two longs — megabytes at any
@@ -155,11 +158,10 @@ def minhash_gate_batch(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
 
-    # 1. band-hash the batch once (persisted; the candidate count in
-    #    step 2 is the action that materializes the cache). The bucket
-    #    cap stays LAZY (in-plan broadcast anti-join) here — the gate
-    #    needs no drop-stats job, and a streaming operator's per-batch
-    #    latency is priced in sequential jobs, so it runs the minimum.
+    # 1. band-hash the batch once (persisted; the bucket-cap probe is
+    #    the action that materializes the cache, so every later job
+    #    reads the cached bands and the Arrow pass runs once). With no
+    #    hot bucket the capped frame IS the cached one.
     batch_bands = _band_key_rows(
         docs, "id", "text", "id", num_hashes, bands, shingle_n
     ).persist()

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import store
+from ..operators.dedup import _cap_buckets
 from ..operators.similarity import (
     _assign_cells,
     ivf_append,
@@ -128,28 +129,15 @@ def _cell_blocked_pairs(
         C = np.array(centroids, dtype=np.float64)
         clustered = _assign_cells(vecs, C, "__v", min(2, len(C)))
     if max_cell_size is not None:
-        # ONE bounded probe job: the over-cap cell list is at most
-        # n_cells rows, so COLLECT it — stats come free from the same
-        # rows (the dedup drop contract: an over-cap cell that skips
-        # verification must be VISIBLE), and the exclusion becomes a
-        # literal isin filter instead of an anti-join whose bucket
-        # aggregate would re-run the Arrow cell assignment inside the
-        # pair job (the r6 _cap_buckets_eager lesson)
-        big_rows = (
-            clustered.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_cell_size)
-            .collect()
-        )
-        if drop_stats is not None:
-            drop_stats["n_dropped_cells"] = len(big_rows)
-            drop_stats["n_dropped_rows"] = int(
-                sum(r["__n"] for r in big_rows)
-            )
-        if big_rows:
-            clustered = clustered.filter(
-                ~F.col("cell").isin([r["cell"] for r in big_rows])
-            )
+        # the shared bucket cap keyed on the cell: one bounded probe job
+        # collects the over-cap cells (at most n_cells rows) and their
+        # drop counts — an over-cap cell that skips verification must be
+        # VISIBLE — and the pair plan anti-joins them as a LocalRelation
+        stats = None if drop_stats is None else {}
+        clustered = _cap_buckets(clustered, ["cell"], max_cell_size, stats)
+        if stats is not None:
+            drop_stats["n_dropped_cells"] = stats["n_dropped_buckets"]
+            drop_stats["n_dropped_rows"] = stats["n_dropped_rows"]
 
     def pair_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
         empty = pd.DataFrame(

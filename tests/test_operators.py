@@ -492,10 +492,13 @@ def _hot_bucket_docs(spark, n_hot=300):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_minhash_bucket_cap_drops_hot_bucket(spark):
+def test_minhash_bucket_cap_drops_hot_bucket(spark, monkeypatch):
     """The bucket-size cap must (a) fire on a hot bucket, (b) report what
     it dropped, and (c) keep the pair join sub-quadratic while still
-    finding the planted near-dup pair."""
+    finding the planted near-dup pair — on the collected-keys path and
+    on the cluster-side path a corpus with more than
+    ``MAX_LOCAL_OVERSIZED`` hot buckets takes."""
+    from dbqt_spark.operators import dedup
     from dbqt_spark.operators.dedup import (
         minhash_candidate_pairs,
         minhash_near_duplicates,
@@ -518,6 +521,20 @@ def test_minhash_bucket_cap_drops_hot_bucket(spark):
     assert stats["n_dropped_rows"] == 300 * 16
     # the hot cluster is excluded (exact dedup's job), the sparse tail kept
     assert pairs == {(10_000, 10_001)}
+
+    # over-limit fallback: 16 hot buckets > 1 keeps the oversized keys
+    # cluster-side (broadcast anti-join + stats job) — same stats, pairs
+    monkeypatch.setattr(dedup, "MAX_LOCAL_OVERSIZED", 1)
+    stats_far = {}
+    pairs_far = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_near_duplicates(
+            df, threshold=0.5, max_bucket_size=100, drop_stats=stats_far
+        ).collect()
+    }
+    assert stats_far == stats
+    assert pairs_far == pairs
+    monkeypatch.undo()
 
     # sub-quadratic: without the cap the candidate join would emit
     # n_hot*(n_hot-1)/2 pairs per band (300 hot docs); with it, only the

@@ -232,6 +232,56 @@ def test_neardup_gate_retry_and_param_guard(spark, tmp_path):
         minhash_gate_batch(batch, store, bands=32)
 
 
+def test_neardup_gate_bucket_cap(spark, tmp_path):
+    """The gate's hot-bucket cap: more than ``max_bucket_size``
+    identical boilerplate docs fill one bucket per band, so those
+    buckets are dropped and the boilerplate docs are never compared —
+    all of them are kept — while true near-dups (within a batch and
+    across batches) still drop. A retried batch keeps the same set, and
+    ``minhash_index_query`` on the gate store reports the query side's
+    dropped buckets."""
+    from dbqt_spark.operators.minhash_index import minhash_index_query
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
+
+    boiler = "shared boilerplate footer text for every page " * 5
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    b1 = spark.createDataFrame(
+        [(i, boiler) for i in range(1, 6)]
+        + [(10, base), (11, base.replace("kappa", "kappaX", 1))],
+        ["doc_id", "text"],
+    )
+    b2 = spark.createDataFrame(
+        [(i, boiler) for i in range(21, 26)]
+        + [
+            (30, base.replace("gamma", "gammaX", 1)),  # near-dup of 10
+            (31, "completely different content about other things " * 5),
+        ],
+        ["doc_id", "text"],
+    )
+    store = str(tmp_path / "store")
+
+    def gate(batch):
+        return sorted(
+            r["id"]
+            for r in minhash_gate_batch(
+                batch, store, threshold=0.5, max_bucket_size=3
+            ).collect()
+        )
+
+    assert gate(b1) == [1, 2, 3, 4, 5, 10]
+    assert gate(b2) == [21, 22, 23, 24, 25, 31]
+    # retry after the store appends landed: same survivors
+    assert gate(b2) == [21, 22, 23, 24, 25, 31]
+
+    st: dict = {}
+    hits = minhash_index_query(
+        b2, store, threshold=0.5, max_bucket_size=3, drop_stats=st,
+        corpus=b1.unionByName(b2),
+    )
+    assert st["query"]["n_dropped_buckets"] > 0
+    assert (30, 10) in {(r["query_id"], r["corpus_id"]) for r in hits.collect()}
+
+
 def test_neardup_gate_adversarial_batch_both_paths(spark, tmp_path):
     """An adversarial all-near-dup batch (every doc pairs with every
     other) must NOT abort and must NOT silently pull O(batch^2) pairs
@@ -330,21 +380,28 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
     distinct (pairs never surface raw from the gate), so the candidate
     plan holds NO shuffle Exchange at all: a BroadcastHashJoin plus the
     one broadcast build. Measured on the gate bench query: 376 -> 117
-    tasks, 44 -> 41 jobs, identical kept set."""
+    tasks, 44 -> 41 jobs, identical kept set.
+
+    The bucket cap the gate applies first is eager: its probe collects
+    the hot keys, so even with hot buckets dropped the plan only
+    anti-joins a broadcast LocalRelation and still holds no shuffle
+    Exchange (a lazy cap put its size aggregate into the plan, with two
+    hash Exchanges)."""
     import re
 
-    from dbqt_spark.operators.dedup import _candidate_pair_plan
+    from dbqt_spark.operators.dedup import _candidate_pair_plan, _cap_buckets
     from dbqt_spark.operators.minhash_index import _band_key_rows
     from dbqt_spark.plans import formatted_plan
 
+    boiler = "shared boilerplate footer text for every page " * 5
     docs = spark.createDataFrame(
-        [(i, f"some text body {i % 3} " * 10) for i in range(8)],
+        [(i, f"some text body {i % 3} " * 10) for i in range(8)]
+        + [(100 + i, boiler) for i in range(5)],
         ["id", "text"],
     )
-    # no bucket cap here: the cap's own size-accounting aggregate lives
-    # in a broadcast subtree and is orthogonal to the pair-join shape
-    # under test
-    capped = _band_key_rows(docs, "id", "text", "id", 32, 16, 3)
+    bands = _band_key_rows(docs, "id", "text", "id", 32, 16, 3)
+    # the 5 identical boilerplate docs fill one hot bucket per band
+    capped = _cap_buckets(bands, ["band_key"], 3)
     within = _candidate_pair_plan(
         capped,
         ["band_key"],
@@ -358,7 +415,7 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
     plan = formatted_plan(within)
     assert "BroadcastHashJoin" in plan
     exchanges = re.findall(r"\(\d+\) (\w*Exchange)", plan)
-    assert exchanges == ["BroadcastExchange"]
+    assert exchanges and set(exchanges) == {"BroadcastExchange"}
     # and the pair SET is unchanged vs the default (distinct'd) plan
     default = _candidate_pair_plan(
         capped,
@@ -371,6 +428,9 @@ def test_neardup_within_batch_candidates_shuffle_free(spark):
     got = {(r["qid"], r["cid"]) for r in within.collect()}
     want = {(r["qid"], r["cid"]) for r in default.collect()}
     assert got == want
+    # the hot buckets were dropped: no boilerplate doc is ever paired,
+    # while the identical body-text docs (3 per bucket) still are
+    assert got and all(q < 100 and c < 100 for q, c in got)
 
 
 def test_neardup_store_compaction_roundtrip(spark, tmp_path):
