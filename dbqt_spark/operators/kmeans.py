@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -93,9 +93,12 @@ def _with_dist_array(df: DataFrame, centers: list[list[float]]):
     )
 
 
-_CLUSTER_OF_DARR = (
-    F.array_position("__darr", F.array_min("__darr")) - 1
-).cast("int")
+def _cluster_of_darr() -> Column:
+    """The nearest center's index from ``__darr`` (a function, not a
+    module constant: building a Column needs a live session)."""
+    return (
+        F.array_position("__darr", F.array_min("__darr")) - 1
+    ).cast("int")
 
 
 # k x dim above which the flat expression array stops being a plan and
@@ -310,7 +313,7 @@ def kmeans_assign(
     # both outputs derive from the one materialized distance array
     return _with_dist_array(base, centers).select(
         id_col,
-        _CLUSTER_OF_DARR.alias("cluster"),
+        _cluster_of_darr().alias("cluster"),
         F.round(F.array_min("__darr"), 6).alias("dist"),
     )
 
@@ -372,7 +375,7 @@ def _fit(
             )
         else:
             assigned = _with_dist_array(base, centers).select(
-                _CLUSTER_OF_DARR.alias("__c"), "__e"
+                _cluster_of_darr().alias("__c"), "__e"
             )
         # exact decimal element means per (cluster, dim): map-side
         # partial sums; k x dim rows reach the driver
@@ -477,7 +480,7 @@ def semantic_near_dup_pairs(
     else:
         clustered = _with_dist_array(base, centers).select(
             F.col(id_col).alias("__id"), "__v",
-            _CLUSTER_OF_DARR.alias("cluster"),
+            _cluster_of_darr().alias("cluster"),
         )
     if max_cluster_size is not None:
         if drop_stats is not None:

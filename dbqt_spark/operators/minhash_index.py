@@ -7,12 +7,12 @@ ONCE into an on-disk index and lets every future crawl probe it, as a
 write/append/query/compact/delete lifecycle (mirroring the ANN stores'
 ``lsh_write``/``ivf_append`` contracts in ``operators/similarity.py``).
 
-It is the only code that knows the MinHash band-store layout. The
-streaming near-dup gate (``streaming/neardup.py``) keeps its state in a
-MinHash index through the helpers below (``_open_index``,
-``_band_key_rows``, ``_live_bands``, ``_append_capped``), so a gate store
-is an index: ``minhash_index_query`` probes it, ``minhash_index_delete``
-tombstones it and ``minhash_index_compact`` compacts it.
+It is the only code that knows the MinHash store layout (``_LAYOUT``).
+The streaming near-dup gate (``streaming/neardup.py``) keeps its state
+in a MinHash index through ``_open_index``, ``_band_key_rows`` and
+``_LAYOUT``, so a gate store is an index: ``minhash_index_query``
+probes it, ``minhash_index_delete`` tombstones it and
+``minhash_index_compact`` compacts it.
 
 Layout at ``path`` (v2)::
 
@@ -20,14 +20,17 @@ Layout at ``path`` (v2)::
                     optional corpus_location + tombstone generation —
                     the MANIFEST: readers resolve data dirs through it
     bands-<N>/      parquet (corpus_id, band_key)
-    tombstones-<T>/ parquet (deleted_id) — the live takedown set
-                    (``minhash_index_delete``); probes anti-join it,
-                    compaction physically drops the rows and retires it
+    docs-<N>/       parquet (corpus_id, text) — a stored-text gate's
+                    accepted texts; an index built by
+                    ``minhash_index_write`` and a pointer-mode gate
+                    have none
 
-A gate store in stored-text mode also holds the gate's own append-only
-``docs/`` directory; no index verb reads it and no commit sweeps it.
+plus the live tombstone set of ``minhash_index_delete`` (``store.delete``):
+probes and the gate read both families without its ids, and compaction
+physically drops their bands AND texts and retires it.
 
-The index stores NO corpus content. v1 kept a ``docs/`` directory of
+An index built by ``minhash_index_write`` stores NO corpus content
+(only a stored-text gate keeps ``docs-<N>``). v1 kept a ``docs/`` dir of
 ``(corpus_id, text)`` for the exact-Jaccard verify — a second copy of
 the ENTIRE corpus inside the index (~100 TB against a 100 TB corpus).
 Storing per-doc shingle-hash sets instead was measured WORSE for
@@ -50,7 +53,7 @@ directory names; ``meta.json`` is committed LAST (atomic temp-file
 replace) and is the single commit point. Data directories are never
 renamed. A crash at any point, the manifest commit included, leaves
 the old manifest pointing at the old (complete) generation; orphan
-``bands-*`` dirs from crashed writes/compactions are garbage, not
+``bands-*``/``docs-*`` dirs from crashed writes/compactions are garbage, not
 corruption, and are swept by the next commit. Store I/O is
 local-filesystem only.
 
@@ -85,11 +88,9 @@ from .dedup import (
 
 MINHASH_INDEX_BUCKETS = 32
 _FORMAT = "minhash_index_v2"
-_LAYOUT = store.Layout("bands", legacy=False)
-
-
-def _bands_dir(path: str, generation: int) -> str:
-    return _LAYOUT.data_dir(path, generation)
+# one tombstone key for both families: a takedown hides a doc's bands
+# and its stored text, and compaction drops both
+_LAYOUT = store.Layout(("bands", "docs"), key="corpus_id", legacy=False)
 
 
 def _band_key_rows(
@@ -133,14 +134,21 @@ def _manifest(
 
 
 def _load_meta(path: str) -> dict:
+    """The manifest of the index at ``path``, after the format checks.
+    Every refusal happens here, before any Spark job and before any
+    commit: a commit sweeps unreferenced ``docs`` entries, so a store
+    with a plain ``docs/`` dir must never reach one."""
     meta = store.read_manifest(
         path, missing="build a MinHash index with minhash_index_write first"
     )
     fmt = meta.get("store_format")
+    regate = (
+        "re-run minhash_gate_batch over the accepted docs into a fresh "
+        "store_dir"
+    )
     if fmt != _FORMAT:
         rebuild = (
-            "re-run minhash_gate_batch over the accepted docs into a fresh "
-            "store_dir (gate stores now keep their state in a MinHash index)"
+            f"{regate} (gate stores now keep their state in a MinHash index)"
             if fmt == "plain_bands_v3"
             else "rebuild with minhash_index_write (v1 duplicated corpus "
             "text into the index; v2 stores bands only and resolves texts "
@@ -149,6 +157,12 @@ def _load_meta(path: str) -> dict:
         raise ValueError(
             f"MinHash index at {path} has store_format={fmt!r}, expected "
             f"{_FORMAT!r} — {rebuild}"
+        )
+    if os.path.isdir(os.path.join(path, "docs")):
+        raise ValueError(
+            f"MinHash index at {path} holds gate texts in a plain docs/ "
+            f"dir that no takedown can remove — {regate} (texts now live "
+            "in generation-named docs-<N> dirs)"
         )
     return meta
 
@@ -182,28 +196,6 @@ def _open_index(
             f"to gate with {params} — matching would silently fail"
         )
     return meta
-
-
-def _live_bands(
-    spark: SparkSession, path: str, meta: dict
-) -> DataFrame | None:
-    """The live (corpus_id, band_key) rows: the manifest's generation
-    minus tombstoned ids (no anti-join when there are none). ``None``
-    while an index opened by ``_open_index`` has no bands yet."""
-    band_path = _bands_dir(path, store.generation(meta))
-    if not os.path.exists(band_path):
-        return None
-    return store.without_tombstones(
-        spark, path, meta, spark.read.parquet(band_path), "corpus_id"
-    )
-
-
-def _append_capped(path: str, meta: dict, rows: DataFrame) -> None:
-    """Append (corpus_id, band_key) rows that are already bucket-capped
-    to the live generation (compaction merges the per-append files)."""
-    rows.write.mode("append").parquet(
-        _bands_dir(path, store.generation(meta))
-    )
 
 
 def _write_capped(
@@ -250,7 +242,8 @@ def minhash_index_write(
         shingle_n,
     )
     _write_capped(
-        banded, _bands_dir(path, generation), "overwrite", max_bucket_size,
+        banded, _LAYOUT.data_dir(path, "bands", generation), "overwrite",
+        max_bucket_size,
         drop_stats,
     )
     # COMMIT POINT: the manifest write publishes the new generation. A
@@ -297,7 +290,7 @@ def minhash_index_append(
     cap = meta.get("max_bucket_size")
     _write_capped(
         banded,
-        _bands_dir(path, store.generation(meta)),
+        _LAYOUT.live_dir(path, "bands", meta),
         "append",
         None if cap is None else int(cap),
         drop_stats,
@@ -308,45 +301,32 @@ def minhash_index_delete(spark: SparkSession, path: str, ids) -> None:
     """Takedown/opt-out verb (VERDICT r12 #4): record corpus ids as
     TOMBSTONES so ``minhash_index_query`` (and a gate over the index)
     never returns a pair involving them again; the next
-    ``minhash_index_compact`` physically drops their band rows (and the
-    tombstones with them). ``ids`` is a DataFrame (first column) or an
-    iterable of id values. Commit protocol and semantics:
-    ``store.delete``.
-
-    On a near-dup gate store in stored-text mode the deleted doc's TEXT
-    stays in the gate's ``docs/`` directory: the tombstone hides its
-    bands, compaction drops the bands only, and nothing rewrites
-    ``docs/``. A takedown that must remove the text from disk needs a
-    pointer-mode gate (``corpus=`` / ``store_texts=False``), which
-    stores no text."""
+    ``minhash_index_compact`` physically drops their band rows, and on
+    a stored-text gate store their texts (and the tombstones with
+    them). ``ids`` is a DataFrame (first column) or an iterable of id
+    values. Commit protocol and semantics: ``store.delete``."""
     store.delete(spark, path, _load_meta(path), _LAYOUT, ids)
 
 
 def minhash_index_compact(spark: SparkSession, path: str) -> None:
     """Rewrite bands into ``MINHASH_INDEX_BUCKETS`` band_key-clustered,
-    key-sorted files (appends leave files per batch). Offline
-    maintenance — run it between gate invocations, not concurrently
-    with one — crash-safe on local filesystems: the compacted data
-    lands under a NEW generation's directory name, the manifest is
-    committed last (the commit point), and the old generation is swept
-    afterwards. A crash anywhere leaves the manifest pointing at a
-    complete generation; half-written new dirs are orphans the next
-    commit removes. An index with no bands yet is left as it is."""
-    meta = _load_meta(path)
-    # compaction also PHYSICALLY drops tombstoned corpus ids (storage
-    # reclaim for the takedown verb) — the same manifest commit below
-    # publishes the clean generation and retires the tombstone set
-    bands = _live_bands(spark, path, meta)
-    if bands is None:
-        return
-    new = store.compacted(meta)
-    (
-        bands.repartition(MINHASH_INDEX_BUCKETS, "band_key")
-        .sortWithinPartitions("band_key")
-        .write.mode("overwrite")
-        .parquet(_bands_dir(path, new["generation"]))
-    )
-    store.commit_manifest(path, new, _LAYOUT)
+    key-sorted files, and a gate store's texts into as many
+    corpus_id-clustered ones (appends leave files per batch).
+    Tombstoned ids are dropped PHYSICALLY from both families, the
+    storage reclaim of the takedown verb. Offline maintenance — run it
+    between gate invocations, not concurrently with one — with the
+    commit protocol of ``store.compact``. An index with no bands yet
+    is left as it is."""
+
+    def rewrite(family: str, rows: DataFrame):
+        key = "band_key" if family == "bands" else "corpus_id"
+        return (
+            rows.repartition(MINHASH_INDEX_BUCKETS, key)
+            .sortWithinPartitions(key)
+            .write
+        )
+
+    store.compact(spark, path, _load_meta(path), _LAYOUT, rewrite)
 
 
 def minhash_index_query(
@@ -423,7 +403,7 @@ def minhash_index_query(
     # tombstoned corpus ids never become candidates (deleted docs are
     # invisible the moment the delete commits, pre-compaction); a gate
     # store before its first append has no bands and so no candidates
-    store_bands = _live_bands(spark, path, meta)
+    store_bands = store.live(spark, path, meta, _LAYOUT, "bands")
     if store_bands is None:
         store_bands = q_bands.select(
             F.col("query_id").alias("corpus_id"), "band_key"

@@ -26,8 +26,9 @@ from .. import store
 from .dedup import _cap_then_localize
 
 # LSH and IVF indexes share one layout: ``vectors``/``vectors-<N>``
-# data dirs and (IVF only) ``centroids.json``/``centroids-<N>.json``
-_LAYOUT = store.Layout("vectors", sidecar="centroids")
+# data dirs and (IVF only) ``centroids.json``/``centroids-<N>.json``;
+# a delete records its own tombstone key (``lsh_delete``'s id_col)
+_LAYOUT = store.Layout(("vectors",), key="vec_id", sidecar="centroids")
 
 
 def _dot_lit(vec_col: Column, q: list[float]) -> Column:
@@ -366,30 +367,6 @@ def ivf_search(
     )
 
 
-
-def _vectors_dir(path: str, meta: "dict | None" = None) -> str:
-    """The CURRENT generation's vectors directory, resolved through the
-    manifest: generation 0 keeps the legacy plain ``vectors`` name so
-    existing indexes read unchanged; compaction bumps to
-    ``vectors-<N>``. meta.json is the single commit point — data only
-    ever lands under generation-unique names, so no reader can observe
-    a half-swapped store and no directory is ever renamed."""
-    meta = store.read_manifest(path) if meta is None else meta
-    return _LAYOUT.data_dir(path, store.generation(meta))
-
-
-def _live_vectors(spark, path: str, meta: dict) -> DataFrame:
-    """The current generation's vectors minus the live tombstone set,
-    keyed on the id column recorded at delete time."""
-    return store.without_tombstones(
-        spark,
-        path,
-        meta,
-        spark.read.parquet(_vectors_dir(path, meta)),
-        meta.get("tombstone_id_col", "vec_id"),
-    )
-
-
 def lsh_delete(spark, path: str, ids, id_col: str = "vec_id") -> None:
     """Takedown/opt-out verb for the persisted ANN stores (VERDICT r12
     #4): record ``ids`` as TOMBSTONES so no probe ever returns them
@@ -460,7 +437,7 @@ def lsh_write(
         )
         part_cols = ["table", "bucket"]
     banded.write.mode("overwrite").partitionBy(*part_cols).parquet(
-        _LAYOUT.data_dir(path, generation)
+        _LAYOUT.data_dir(path, "vectors", generation)
     )
     # manifest LAST — the commit point
     store.commit_manifest(
@@ -509,7 +486,7 @@ def lsh_append(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
         )
         part_cols = ["table", "bucket"]
     banded.write.mode("append").partitionBy(*part_cols).parquet(
-        _vectors_dir(path, meta)
+        _LAYOUT.live_dir(path, "vectors", meta)
     )
 
 
@@ -532,62 +509,28 @@ def _checked_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     return df.filter(vec.isNotNull()).withColumn(vec_col, checked)
 
 
+def _one_file_per_dir(*cols: str):
+    """A ``store.compact`` rewrite that leaves one file per
+    partition-value directory: hash-repartition on the partition
+    column(s), so each value lands in exactly ONE task and the
+    partitionBy writer emits exactly one file per directory. This is
+    the standard lakehouse small-file compaction (Delta OPTIMIZE /
+    Iceberg rewrite_data_files); partition pruning is untouched because
+    the directory layout is reproduced exactly."""
+    return lambda family, rows: rows.repartition(*cols).write.partitionBy(
+        *cols
+    )
+
+
 def lsh_compact(spark, path: str) -> None:
     """Rewrite the LSH index to one file per bucket directory (appends
-    leave one file per bucket per batch). See ``_compact_partitioned``."""
+    leave one file per bucket per batch), dropping tombstoned rows;
+    commit protocol: ``store.compact``."""
     meta = store.read_manifest(path, missing="build it with lsh_write first")
     cols = (
         ["table", "bucket"] if int(meta.get("n_tables", 1)) > 1 else ["bucket"]
     )
-    _compact_partitioned(spark, path, cols)
-
-
-def _compact_partitioned(
-    spark, path: str, partition_cols: "str | list[str]"
-) -> None:
-    """One file per partition-value directory: hash-repartition on the
-    partition column(s) (each value lands in exactly ONE task, so the
-    partitionBy writer emits exactly one file per directory). Offline
-    maintenance — run between ingest batches, not concurrently with
-    one. Small-file compaction is the standard lakehouse maintenance
-    op (Delta OPTIMIZE / Iceberg rewrite_data_files); partition pruning
-    is untouched because the directory layout is reproduced exactly.
-    Crash-safe on local filesystems (``dbqt_spark.store``): the
-    compacted data lands under the NEXT generation's directory name and
-    the manifest (meta.json) is committed LAST as the commit point — no
-    directory is ever renamed. A crash anywhere, the manifest commit
-    included, leaves the manifest pointing at a complete generation;
-    half-written next-generation dirs are orphans the next commit
-    sweeps."""
-    import os
-
-    meta = store.read_manifest(path)
-    if not os.path.exists(_vectors_dir(path, meta)):
-        return
-    new = store.compacted(meta)
-    cols = (
-        [partition_cols] if isinstance(partition_cols, str) else partition_cols
-    )
-    # compaction PHYSICALLY drops tombstoned rows (the takedown verb's
-    # storage reclaim): the new generation is written post-anti-join
-    # and the same manifest commit clears the tombstone pointer
-    (
-        _live_vectors(spark, path, meta)
-        .repartition(*cols)
-        .write.mode("overwrite")
-        .partitionBy(*cols)
-        .parquet(_LAYOUT.data_dir(path, new["generation"]))
-    )
-    # carry centroids (IVF stores only) to the new generation name
-    # BEFORE the manifest commits, so the new meta never points at a
-    # missing centroids file
-    old_centroids = _LAYOUT.sidecar_file(path, store.generation(meta))
-    if os.path.exists(old_centroids):
-        store.commit_json(
-            _LAYOUT.sidecar_file(path, new["generation"]),
-            store.read_json(old_centroids),
-        )
-    store.commit_manifest(path, new, _LAYOUT)
+    store.compact(spark, path, meta, _LAYOUT, _one_file_per_dir(*cols))
 
 
 def _hyperplanes_for(
@@ -657,7 +600,7 @@ def lsh_topk_from_index(
         raise ValueError(
             f"query dimension {len(query)} != index dimension {dim}"
         )
-    vectors = _live_vectors(spark, path, meta)
+    vectors = store.live(spark, path, meta, _LAYOUT, "vectors")
     if n_tables <= 1:
         planes = _hyperplanes(len(query), n_planes, seed)
         qsig = _query_signature(query, planes)
@@ -719,7 +662,7 @@ def ivf_write(
         # task).
         assigned = assigned.repartition("cell")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        _LAYOUT.data_dir(path, generation)
+        _LAYOUT.data_dir(path, "vectors", generation)
     )
     store.commit_json(_LAYOUT.sidecar_file(path, generation), centroids)
     C = np.array(centroids, dtype=np.float64)
@@ -809,14 +752,18 @@ def ivf_append(
         # periodic ivf_compact story is for corpus-sized appends
         appended = appended.repartition("cell")
     appended.write.mode("append").partitionBy("cell").parquet(
-        _vectors_dir(path, meta)
+        _LAYOUT.live_dir(path, "vectors", meta)
     )
 
 
 def ivf_compact(spark, path: str) -> None:
     """Rewrite the IVF index to one file per cell directory (appends
-    leave one file per cell per batch). See ``_compact_partitioned``."""
-    _compact_partitioned(spark, path, "cell")
+    leave one file per cell per batch), dropping tombstoned rows and
+    carrying the centroids forward; commit protocol: ``store.compact``."""
+    store.compact(
+        spark, path, store.read_manifest(path), _LAYOUT,
+        _one_file_per_dir("cell"),
+    )
 
 
 def ivf_load(
@@ -827,7 +774,7 @@ def ivf_load(
     centroids = store.read_json(
         _LAYOUT.sidecar_file(path, store.generation(meta))
     )
-    return _live_vectors(spark, path, meta), centroids
+    return store.live(spark, path, meta, _LAYOUT, "vectors"), centroids
 
 
 def random_band_values(

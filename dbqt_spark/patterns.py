@@ -10,9 +10,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 def pattern_to_regex(pattern: str) -> str:
     """Anchored regex from a %-wildcard pattern: every char escaped except
@@ -35,15 +32,3 @@ def filter_excluded_tables(names: list[str], patterns: list[str]) -> list[str]:
     if not patterns:
         return list(names)
     return [n for n in names if not matches_any_pattern(n, patterns)]
-
-
-def exclusion_condition(col: Column, patterns: list[str]) -> Column:
-    """Spark predicate: TRUE for rows NOT matching any pattern — for
-    filtering name columns at DataFrame scale."""
-    if not patterns:
-        return F.lit(True)
-    cond = None
-    for p in patterns:
-        m = F.upper(col).rlike(pattern_to_regex(p))
-        cond = m if cond is None else (cond | m)
-    return ~cond

@@ -6631,15 +6631,20 @@ def q_tier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the two tiers' eager candidate phases are independent job chains
     # — overlap them (guide §2.6: submit independent jobs from a small
-    # thread pool so one tier's tail back-fills the other's stages)
+    # thread pool so one tier's tail back-fills the other's stages);
+    # the submits carry the caller's job group into the pool threads
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_truth = pool.submit(
-            ngram_jaccard_near_duplicates, docs, threshold=0.6
+            inherit(ngram_jaccard_near_duplicates), docs, threshold=0.6
         )
         f_cand = pool.submit(
-            simhash_near_duplicates, docs, max_hamming=3, portable=True
+            inherit(simhash_near_duplicates), docs, max_hamming=3,
+            portable=True,
         )
         truth, cand = f_truth.result(), f_cand.result()
     return pair_tier_eval(truth, cand)

@@ -1,15 +1,18 @@
-"""The commit protocol shared by every persisted store.
+"""The commit protocol and generational data API shared by every
+persisted store.
 
 The MinHash band index (``operators/minhash_index.py``), the LSH and IVF
 vector indexes (``operators/similarity.py``), the foreachBatch publish
 markers (``streaming/publish.py``) and the bloom-filter sidecar all keep
 their state the same way (the streaming gates hold no store code of
-their own: ``streaming/neardup.py`` keeps a MinHash index,
-``streaming/semgate.py`` an IVF index, and both record finished
-micro-batches with markers): data lands under generation-named
-directories, and one small JSON manifest (``meta.json``) says which
+their own: ``streaming/neardup.py`` keeps a MinHash index, its stored
+texts included, ``streaming/semgate.py`` an IVF index, and both record
+finished micro-batches with markers): data lands under generation-named
+directories, one family per kind of row (a ``Layout``: ``bands-<N>``
+and ``docs-<N>``, or ``vectors-<N>`` plus a ``centroids-<N>.json``
+sidecar), and one small JSON manifest (``meta.json``) says which
 generation is live. This module is the only code that reads or commits
-a manifest:
+a manifest, reads a live generation or compacts one:
 
 - **Commit** (``commit_json``/``commit_manifest``): the JSON goes to a
   temp file in the same directory, is flushed and fsynced, and replaces
@@ -17,12 +20,17 @@ a manifest:
   or the new content, never a prefix, so a writer that dies at any
   point leaves the previous manifest in force. Data directories are
   never renamed.
-- **Sweep** (in ``commit_manifest``): after a commit, the generation-named entries the
-  manifest does not reference (old generations, the leftovers of a
-  crashed rebuild, compaction or delete) and stale temp files go.
-- **Tombstones** (``delete``/``without_tombstones``): a delete commits a
-  new tombstone generation holding the live set plus the new ids;
-  readers anti-join it until a compaction retires it.
+- **Sweep** (in ``commit_manifest``): after a commit, the entries of
+  the layout's families the manifest does not reference (old
+  generations, the leftovers of a crashed rebuild, compaction or
+  delete) and stale temp files go.
+- **Tombstones** (``delete``/``live``): a delete commits a new
+  tombstone generation holding the live set plus the new ids; ``live``
+  reads a family minus them, so one delete hides a doc in every family
+  (its bands and its stored text), until a compaction retires them.
+- **Compaction** (``compact``): every family's live rows go to the
+  next generation, so a deleted row is physically gone from each.
+  Appends write into ``Layout.live_dir`` with the store's own writer.
 - **Markers** (``write_marker``/``has_marker``/``marker_names``): empty
   files whose existence records a finished step (a published batch, a
   gated micro-batch).
@@ -41,8 +49,9 @@ import os
 import shutil
 import tempfile
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 _MANIFEST = "meta.json"
@@ -118,20 +127,27 @@ def _name(base: str, gen: int, legacy: bool, ext: str = "") -> str:
 
 @dataclass(frozen=True)
 class Layout:
-    """The generation-named entries of one store kind. ``data`` is the
-    directory family readers resolve through the manifest's
-    ``generation``; with ``legacy`` set, generation 0 keeps the plain
-    un-suffixed name, so stores written before generations existed read
-    unchanged. ``sidecar`` is an optional per-generation JSON file
-    family (IVF centroids). Any store may hold one live
-    ``tombstones-<T>`` directory."""
+    """The generation-named entries of one store kind. ``families``
+    are its data directory families, resolved through the manifest's
+    ``generation`` and filtered by one tombstone set on ``key`` (or the
+    manifest's ``tombstone_id_col``). With ``legacy`` set, generation 0
+    keeps the plain un-suffixed names, so stores written before
+    generations existed read unchanged. ``sidecar`` is an optional
+    per-generation JSON file family (IVF centroids). Any store may hold
+    one live ``tombstones-<T>`` directory."""
 
-    data: str
+    families: tuple[str, ...]
+    key: str
     legacy: bool = True
     sidecar: str | None = None
 
-    def data_dir(self, path: str, gen: int) -> str:
-        return os.path.join(path, _name(self.data, gen, self.legacy))
+    def data_dir(self, path: str, family: str, gen: int) -> str:
+        return os.path.join(path, _name(family, gen, self.legacy))
+
+    def live_dir(self, path: str, family: str, meta: dict) -> str:
+        """``family``'s directory in the live generation: where appends
+        land and ``live`` reads."""
+        return self.data_dir(path, family, generation(meta))
 
     def sidecar_file(self, path: str, gen: int) -> str:
         return os.path.join(path, _name(self.sidecar, gen, self.legacy, ".json"))
@@ -144,7 +160,7 @@ class Layout:
 
     def live(self, meta: dict) -> set[str]:
         gen = generation(meta)
-        names = {_name(self.data, gen, self.legacy)}
+        names = {_name(f, gen, self.legacy) for f in self.families}
         if self.sidecar:
             names.add(_name(self.sidecar, gen, self.legacy, ".json"))
         t = int(meta.get("tombstone_generation", 0))
@@ -165,7 +181,7 @@ def _sweep(path: str, layout: Layout, meta: dict) -> None:
     ``meta`` does not reference, plus stale commit temp files. Only
     ever run with the manifest just committed, so it never touches the
     live generation."""
-    families = {layout.data, layout.sidecar, "tombstones"}
+    families = {*layout.families, layout.sidecar, "tombstones"}
     live = layout.live(meta)
     for name in os.listdir(path):
         if not (
@@ -236,19 +252,64 @@ def delete(spark, path: str, meta: dict, layout: Layout, ids) -> None:
     commit_manifest(path, {**meta, "tombstone_generation": t_new}, layout)
 
 
-def without_tombstones(
-    spark, path: str, meta: dict, df: DataFrame, col: str
-) -> DataFrame:
-    """Anti-join ``df[col]`` against the live tombstone set (no-op when
-    none). The tombstone side broadcasts: deletes are tiny next to the
-    store, whose scan never shuffles for them."""
+def live(
+    spark, path: str, meta: dict, layout: Layout, family: str
+) -> DataFrame | None:
+    """The rows of ``family`` in the live generation, anti-joined
+    against the live tombstone set (none: no join), or ``None`` while
+    the family has no directory in that generation (an index opened
+    before its first append, a pointer-mode gate's texts). The
+    tombstone side broadcasts: deletes are tiny next to the store,
+    whose scan never shuffles for them."""
+    family_dir = layout.live_dir(path, family, meta)
+    if not os.path.exists(family_dir):
+        return None
+    df = spark.read.parquet(family_dir)
     t = int(meta.get("tombstone_generation", 0))
     if not t:
         return df
+    key = meta.get("tombstone_id_col", layout.key)
     tombs = spark.read.parquet(_tombstones_dir(path, t)).select(
-        F.col("deleted_id").alias(col)
+        F.col("deleted_id").alias(key)
     )
-    return df.join(F.broadcast(tombs), col, "left_anti")
+    return df.join(F.broadcast(tombs), key, "left_anti")
+
+
+def compact(
+    spark,
+    path: str,
+    meta: dict,
+    layout: Layout,
+    rewrite: Callable[[str, DataFrame], DataFrameWriter],
+) -> None:
+    """Rewrite every family's ``live`` rows into the next generation
+    through the caller's writer ``rewrite(family, rows)``, carry the
+    sidecar forward, commit ``compacted(meta)`` (which retires the
+    tombstones) and sweep the old generation. Offline maintenance, not
+    concurrent with ingest. A crash anywhere, the commit included,
+    leaves the manifest on the complete old generation; the
+    half-written next one is swept by the next commit. A store with no
+    data directory in its live generation is left as it is."""
+    new = compacted(meta)
+    gen, new_gen = generation(meta), generation(new)
+    rows = {
+        family: live(spark, path, meta, layout, family)
+        for family in layout.families
+    }
+    if all(df is None for df in rows.values()):
+        return
+    for family, df in rows.items():
+        if df is not None:
+            rewrite(family, df).mode("overwrite").parquet(
+                layout.data_dir(path, family, new_gen)
+            )
+    # the new manifest must never point at a missing sidecar
+    if layout.sidecar and os.path.exists(layout.sidecar_file(path, gen)):
+        commit_json(
+            layout.sidecar_file(path, new_gen),
+            read_json(layout.sidecar_file(path, gen)),
+        )
+    commit_manifest(path, new, layout)
 
 
 def write_marker(directory: str, name: str) -> None:

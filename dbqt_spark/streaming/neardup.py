@@ -26,16 +26,15 @@ Per micro-batch (``minhash_gate_batch``):
 The gate's state is a MinHash index (``operators/minhash_index.py``):
 the first batch commits the index manifest with the gate's banding
 parameters, every batch appends its survivors' bands, and the index
-helpers own the band layout, the parameter check, the tombstone
-anti-join and compaction. So the index verbs work on a gate store:
-``minhash_index_query`` probes it, ``minhash_index_delete`` takes
-accepted docs down, and ``minhash_index_compact`` (offline, between
-gate invocations) rewrites the per-batch append files. In stored-text
-mode the gate also keeps an append-only ``docs/`` directory of the
-accepted texts inside the store; the index never reads or sweeps it.
-So a takedown on a stored-text store hides the doc's bands but leaves
-its text in ``docs/`` (compaction drops bands only); pointer mode
-(``corpus=``) stores no text.
+helpers own the store layout and the parameter check. In stored-text
+mode the accepted texts are the index's second family (``docs-<N>``,
+``(corpus_id, text)``), read and filtered by the same tombstones as the
+bands; pointer mode (``corpus=``) stores no text. So the index verbs
+work on a gate store: ``minhash_index_query`` probes it,
+``minhash_index_delete`` takes accepted docs down (bands and text are
+hidden at once), and ``minhash_index_compact`` (offline, between gate
+invocations) rewrites the per-batch append files, dropping a deleted
+doc's bands and text from disk.
 
 Scale notes: step 2's candidate join BROADCASTS the arriving batch's
 band keys (micro-batch x bands rows of two longs — megabytes at any
@@ -55,17 +54,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
 from ..operators.dedup import BROADCAST_PAIR_LIMIT, jaccard_shingle_udf
-from ..operators.minhash_index import (
-    _append_capped,
-    _band_key_rows,
-    _live_bands,
-    _open_index,
-)
+from ..operators.minhash_index import _LAYOUT, _band_key_rows, _open_index
 
 # The verify kernel is SHARED with the batch operator
 # (``operators.dedup.jaccard_shingle_udf``) so the gate's verdicts, the
@@ -110,13 +105,16 @@ def minhash_gate_batch(
     exact-Jaccard-verified in ONE job (union tagged ``from_store``, both
     text attachments ride the same broadcast). The first gate shape ran
     ``minhash_near_duplicates`` for (a) and re-banded the survivors for
-    (b)/(c) — three Arrow passes over the texts and ~10 sequential jobs
-    per micro-batch; per-batch LATENCY is the operative cost of a
-    streaming gate, so the passes are fused. Cross-store candidates are
-    drawn from the FULL batch (not the within-batch survivors): the
-    extra pairs belong to docs the within-greedy already dropped, so the
-    kept set is identical and no ordering between the two phases is
-    needed.
+    (b)/(c) — three Arrow passes over the texts per micro-batch;
+    per-batch LATENCY is the operative cost of a streaming gate, so the
+    passes are fused. The fused gate runs 8 Spark jobs on a first batch
+    and 20 on a batch against a stored index, appends included, before
+    the caller's own action on the result (measured on perfbench's
+    curation_store corpus, 300- and 372-doc batches, local[4]).
+    Cross-store candidates are drawn from the FULL batch (not the
+    within-batch survivors): the extra pairs belong to docs the
+    within-greedy already dropped, so the kept set is identical and no
+    ordering between the two phases is needed.
 
     Within-batch semantics: verified (id_a < id_b) pairs feed a greedy
     first-wins walk (earlier ids live — the same contract
@@ -145,12 +143,11 @@ def minhash_gate_batch(
     meta = _open_index(
         store_dir, num_hashes, bands, shingle_n, max_bucket_size
     )
-    doc_path = os.path.join(store_dir, "docs")
     external_texts = corpus is not None
     # NOT spread (measured, r16): fanning a single-partition micro-batch
     # out before the band hash (the r15 item-8 treatment) made the gate
-    # 5x SLOWER warm (10.4 -> 53 s solo) — the gate runs ~10 sequential
-    # jobs per batch, and every one of them then schedules cores x
+    # 5x SLOWER warm (10.4 -> 53 s solo) — the gate runs 8-20 jobs per
+    # batch (see above), and every one of them then schedules cores x
     # tasks + Arrow workers for ~1000-row inputs; the kernel itself is
     # not the bottleneck at trigger-bounded sizes. At corpus-scale
     # triggers the batch already arrives in many splits.
@@ -198,24 +195,22 @@ def minhash_gate_batch(
     #    broadcast is gated on the measured count, mirroring
     #    dedup.BROADCAST_PAIR_LIMIT).
     cands = within_cand.withColumn("from_store", F.lit(False))
-    store_docs = None
-    # doc_path is checked too (stored-texts mode): a first-batch retry
-    # after the bands append landed but the docs append did not must not
-    # die reading a missing docs dir (it skips the cross-store step —
-    # the store holds only this batch's own rows, which the self-pair
-    # exclusion discards anyway). Pointer mode needs only the bands.
-    store_bands = _live_bands(spark, store_dir, meta)
-    has_store = store_bands is not None and (
-        external_texts or os.path.exists(doc_path)
-    )
-    if has_store:
-        store_docs = (
-            corpus.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("text")
-            )
-            if external_texts
-            else spark.read.parquet(doc_path)
+    # both families are read live (tombstoned docs are invisible). A
+    # stored-text first-batch retry after the bands append landed but
+    # the docs append did not has no texts yet: it skips the
+    # cross-store step (the store holds only this batch's own rows,
+    # which the self-pair exclusion discards anyway).
+    store_bands = store.live(spark, store_dir, meta, _LAYOUT, "bands")
+    if external_texts:
+        store_docs = corpus.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("text")
         )
+    else:
+        store_docs = store.live(spark, store_dir, meta, _LAYOUT, "docs")
+        if store_docs is not None:
+            store_docs = store_docs.withColumnRenamed("corpus_id", "id")
+    has_store = store_bands is not None and store_docs is not None
+    if has_store:
         cross_cand = (
             F.broadcast(capped.select(F.col("id").alias("qid"), "band_key"))
             .join(store_bands, "band_key")
@@ -387,23 +382,33 @@ def minhash_gate_batch(
     #    DISJOINT directories from independent cached inputs, so they
     #    run as CONCURRENT jobs — per-batch latency pays one append's
     #    scheduling + commit latency, not two (measured ~0.5 s/batch).
+    #    Both land in the live generation's family dirs; the submits
+    #    carry the caller's job group into the pool threads.
     from concurrent.futures import ThreadPoolExecutor
 
     def _do_bands() -> None:
-        _append_capped(
-            store_dir,
-            meta,
-            band_append.select(F.col("id").alias("corpus_id"), "band_key"),
+        band_append.select(
+            F.col("id").alias("corpus_id"), "band_key"
+        ).write.mode("append").parquet(
+            _LAYOUT.live_dir(store_dir, "bands", meta)
         )
 
     def _do_docs() -> None:
-        batch_kept.write.mode("append").parquet(doc_path)
+        batch_kept.select(
+            F.col("id").alias("corpus_id"), "text"
+        ).write.mode("append").parquet(
+            _LAYOUT.live_dir(store_dir, "docs", meta)
+        )
 
     if external_texts:
         _do_bands()  # pointer mode: bands are the whole store
     else:
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_do_bands), pool.submit(_do_docs)]
+            futs = [
+                pool.submit(inherit(_do_bands)),
+                pool.submit(inherit(_do_docs)),
+            ]
             for f in futs:
                 f.result()
     batch_bands.unpersist()

@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 
 from dbqt_spark.plans import formatted_plan
 
+from dbqt_spark import store
 from dbqt_spark.catalog import load_table
+from dbqt_spark.operators.similarity import _LAYOUT as _VECTOR_LAYOUT
 from dbqt_spark.operators.similarity import (
-    _vectors_dir,
     ivf_append,
     ivf_build,
     ivf_compact,
@@ -25,6 +26,10 @@ from dbqt_spark.operators.similarity import (
     lsh_topk_from_index,
     lsh_write,
 )
+
+
+def _vectors_dir(path: str) -> str:
+    return _VECTOR_LAYOUT.live_dir(path, "vectors", store.read_manifest(path))
 
 
 def _files_per_dir(vectors_path: str) -> dict[str, int]:
@@ -551,8 +556,8 @@ def test_minhash_index_probe_never_shuffles_index(spark, sf_dir, tmp_path):
     import re
 
     from dbqt_spark.operators.minhash_index import (
+        _LAYOUT,
         _band_key_rows,
-        _bands_dir,
         minhash_index_write,
     )
     from pyspark.sql import functions as F
@@ -562,7 +567,7 @@ def test_minhash_index_probe_never_shuffles_index(spark, sf_dir, tmp_path):
     minhash_index_write(docs.filter("doc_id % 2 = 0"), path)
     with open(os.path.join(path, "meta.json")) as f:
         gen = int(json.load(f)["generation"])
-    store_bands = spark.read.parquet(_bands_dir(path, gen))
+    store_bands = spark.read.parquet(_LAYOUT.data_dir(path, "bands", gen))
     crawl = docs.filter("doc_id % 2 = 1")
     q_bands = _band_key_rows(crawl, "query_id", "text", "doc_id", 32, 16, 3)
     plan = formatted_plan(
@@ -829,16 +834,20 @@ def test_minhash_index_delete_lifecycle(spark, tmp_path):
     minhash_index_delete(spark, path, [1])
     assert probe_ids() == {2}
 
-    from dbqt_spark.operators.minhash_index import _bands_dir
+    from dbqt_spark.operators.minhash_index import _LAYOUT
 
     with open(os.path.join(path, "meta.json")) as f:
         gen = json.load(f)["generation"]
-    rows_before = spark.read.parquet(_bands_dir(path, gen)).count()
+    rows_before = spark.read.parquet(
+        _LAYOUT.data_dir(path, "bands", gen)
+    ).count()
     minhash_index_compact(spark, path)
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     assert "tombstone_generation" not in meta
-    bands = spark.read.parquet(_bands_dir(path, meta["generation"]))
+    bands = spark.read.parquet(
+        _LAYOUT.data_dir(path, "bands", meta["generation"])
+    )
     assert bands.count() < rows_before
     assert bands.filter("corpus_id = 1").count() == 0
     assert probe_ids() == {2}
@@ -860,13 +869,19 @@ def test_torn_manifest_commit_keeps_previous_generation(
     half its text) must leave the previous manifest committed, for every
     store kind: it still parses, probes and the gate answer exactly as
     before the crash, and the next rebuild commits generation old+1
-    (not a fresh generation 1)."""
+    (not a fresh generation 1). A gate compaction that dies between its
+    two families (``bands-<N+1>`` written, ``docs-<N+1>`` half-written,
+    no commit) leaves the gate answering as before, and the next commit
+    sweeps both orphans."""
     import json
     import random
     import shutil
 
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from dbqt_spark.operators.minhash_index import (
         minhash_index_compact,
+        minhash_index_delete,
         minhash_index_query,
         minhash_index_write,
     )
@@ -966,11 +981,32 @@ def test_torn_manifest_commit_keeps_previous_generation(
     gen = manifest(gate)["generation"]
     crash(minhash_index_compact, spark, gate)
     assert manifest(gate)["generation"] == gen
+
+    # a compaction killed after its bands family, before its docs one
+    real_parquet = DataFrameWriter.parquet
+
+    def dies_at_docs(self, path, *args, **kwargs):
+        if os.path.basename(path) == f"docs-{gen + 1}":
+            os.makedirs(path, exist_ok=True)  # the half-written family
+            raise OSError("simulated crash between families")
+        return real_parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", dies_at_docs)
+        with pytest.raises(OSError, match="between families"):
+            minhash_index_compact(spark, gate)
+    assert manifest(gate)["generation"] == gen
+    assert {f"bands-{gen + 1}", f"docs-{gen + 1}"} <= set(os.listdir(gate))
     got = sorted(
         r["id"]
         for r in minhash_gate_batch(arrivals, gate, threshold=0.5).collect()
     )
     assert got == want
+    # the next commit (a delete) sweeps both next-generation orphans
+    minhash_index_delete(spark, gate, [999])
+    assert sorted(os.listdir(gate)) == [
+        f"bands-{gen}", f"docs-{gen}", "meta.json", "tombstones-1"
+    ]
 
 
 def test_store_path_with_uri_scheme_is_refused(spark, tmp_path, monkeypatch):
@@ -1064,9 +1100,13 @@ def test_gate_refuses_pre_index_store_before_any_job(spark, tmp_path):
     (its own ``bands`` directory of ``old_id`` rows under a
     ``plain_bands_v3`` manifest) is refused with a ValueError naming
     the rebuild, before any Spark job runs — gating against it would
-    read a layout no code writes any more."""
+    read a layout no code writes any more. So is a v2 gate store whose
+    texts sit in a plain un-generational ``docs/`` dir: the gate and
+    ``minhash_index_delete`` refuse it before any job and before any
+    commit, whose sweep would otherwise delete those texts."""
     import json
 
+    from dbqt_spark.operators.minhash_index import minhash_index_delete
     from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     gate = tmp_path / "gate"
@@ -1088,3 +1128,73 @@ def test_gate_refuses_pre_index_store_before_any_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sorted(os.listdir(gate)) == ["bands", "meta.json"]
+
+    plain_docs = tmp_path / "gate_v2"
+    (plain_docs / "bands-1").mkdir(parents=True)
+    (plain_docs / "docs").mkdir()
+    (plain_docs / "docs" / "part-00000.parquet").write_bytes(b"texts")
+    (plain_docs / "meta.json").write_text(json.dumps({
+        "num_hashes": 32, "bands": 16, "shingle_n": 3,
+        "max_bucket_size": 1000, "store_format": "minhash_index_v2",
+        "generation": 1, "corpus_location": None,
+    }))
+    sc.setJobGroup("plain-docs-gate-refusal", "gate store format check")
+    try:
+        for call in (
+            lambda: minhash_gate_batch(docs, str(plain_docs)),
+            lambda: minhash_index_delete(spark, str(plain_docs), [1]),
+        ):
+            with pytest.raises(ValueError, match="plain docs/ dir"):
+                call()
+        assert (
+            sc.statusTracker().getJobIdsForGroup("plain-docs-gate-refusal")
+            == []
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(os.listdir(plain_docs)) == ["bands-1", "docs", "meta.json"]
+    assert os.listdir(plain_docs / "docs") == ["part-00000.parquet"]
+
+
+def test_gate_takedown_removes_stored_text(spark, tmp_path):
+    """A takedown on a stored-text gate store is complete: after
+    ``minhash_index_delete`` and ``minhash_index_compact`` the deleted
+    doc's text is in no parquet file under the store, the other
+    accepted texts still are, and the gate still drops a near-dup of a
+    surviving doc."""
+    import pyarrow.parquet as pq
+
+    from dbqt_spark.operators.minhash_index import (
+        minhash_index_compact,
+        minhash_index_delete,
+    )
+    from dbqt_spark.streaming.neardup import minhash_gate_batch
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    other = "completely different content about other things entirely " * 5
+    fresh = "fresh independent words here now " * 5
+    gate = str(tmp_path / "gate")
+    for batch in ([(1, base), (2, other)], [(3, fresh)]):
+        minhash_gate_batch(
+            spark.createDataFrame(batch, ["doc_id", "text"]), gate,
+            threshold=0.5,
+        ).collect()
+
+    minhash_index_delete(spark, gate, [1])
+    minhash_index_compact(spark, gate)
+
+    stored = [
+        text
+        for f in glob.glob(os.path.join(gate, "**", "*.parquet"),
+                           recursive=True)
+        for text in pq.read_table(f).to_pydict().get("text", [])
+    ]
+    assert base not in stored
+    assert sorted(stored) == sorted([other, fresh])
+    near_other = other.replace("things", "thingsX", 1)
+    kept = minhash_gate_batch(
+        spark.createDataFrame([(4, near_other)], ["doc_id", "text"]),
+        gate,
+        threshold=0.5,
+    ).collect()
+    assert kept == []

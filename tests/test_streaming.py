@@ -343,11 +343,12 @@ def test_neardup_store_join_no_store_exchange(spark, tmp_path):
     import re
 
     from dbqt_spark.operators.minhash_index import (
+        _LAYOUT,
         _band_key_rows,
-        _live_bands,
         _load_meta,
     )
     from dbqt_spark.plans import formatted_plan
+    from dbqt_spark.store import live
     from dbqt_spark.streaming.neardup import minhash_gate_batch
 
     store = str(tmp_path / "store")
@@ -362,7 +363,7 @@ def test_neardup_store_join_no_store_exchange(spark, tmp_path):
     minhash_gate_batch(b2, store)  # second append -> multi-file store
 
     new_bands = _band_key_rows(b2, "new_id", "text", "doc_id", 32, 16, 3)
-    store_bands = _live_bands(spark, store, _load_meta(store))
+    store_bands = live(spark, store, _load_meta(store), _LAYOUT, "bands")
     plan = formatted_plan(
         F.broadcast(new_bands).join(store_bands, "band_key")
     )
@@ -442,7 +443,7 @@ def test_neardup_store_compaction_roundtrip(spark, tmp_path):
 
     from dbqt_spark.operators.minhash_index import (
         MINHASH_INDEX_BUCKETS,
-        _bands_dir,
+        _LAYOUT,
         _load_meta,
         minhash_index_compact,
     )
@@ -452,7 +453,7 @@ def test_neardup_store_compaction_roundtrip(spark, tmp_path):
         return glob.glob(os.path.join(band_path, "part-*"))
 
     def live_band_path(store):
-        return _bands_dir(store, _load_meta(store)["generation"])
+        return _LAYOUT.live_dir(store, "bands", _load_meta(store))
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     words = "red green blue cyan magenta yellow black white grey pink".split()
@@ -620,7 +621,7 @@ def test_neardup_store_compaction_crash_recovery(spark, tmp_path):
     gates against an absent one), and the next compaction sweeps the
     orphan."""
     from dbqt_spark.operators.minhash_index import (
-        _bands_dir,
+        _LAYOUT,
         _load_meta,
         minhash_index_compact,
     )
@@ -654,7 +655,7 @@ def test_neardup_store_compaction_crash_recovery(spark, tmp_path):
     # the next compaction commits a real new generation and sweeps both
     # the orphan and the old dir
     minhash_index_compact(spark, store)
-    new_band_path = _bands_dir(store, _load_meta(store)["generation"])
+    new_band_path = _LAYOUT.live_dir(store, "bands", _load_meta(store))
     assert os.path.exists(new_band_path)
     leftover = {
         d for d in os.listdir(store)
@@ -929,8 +930,13 @@ def test_neardup_gate_pointer_mode_no_text_store(spark, tmp_path):
     with_texts = run(True, "t")
     pointer = run(False, "p")
     assert pointer == with_texts == [1, 2, 4]  # doc 3 dropped cross-batch
-    assert os.path.exists(str(tmp_path / "store_t" / "docs"))
-    assert not os.path.exists(str(tmp_path / "store_p" / "docs"))
+    def docs_family(tag):
+        return [
+            d for d in os.listdir(tmp_path / f"store_{tag}")
+            if d.startswith("docs-")
+        ]
+
+    assert docs_family("t") and not docs_family("p")
 
 
 def test_streaming_curate_blocklist_stage(spark, tmp_path):
