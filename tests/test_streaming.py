@@ -930,6 +930,7 @@ def test_neardup_gate_pointer_mode_no_text_store(spark, tmp_path):
     with_texts = run(True, "t")
     pointer = run(False, "p")
     assert pointer == with_texts == [1, 2, 4]  # doc 3 dropped cross-batch
+
     def docs_family(tag):
         return [
             d for d in os.listdir(tmp_path / f"store_{tag}")
